@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.Row
 import graft.expr.Timestamps
 import graft.schema.FlightSchemas
@@ -116,17 +116,6 @@ object FlightStream {
       .as[graft.schema.FlightEvent]
   }
 
-  /** S2: Kafka producer sink (run_producer.py:143-158 analog) — JSON
-    * value stream back to a topic. Compile-only here (no broker). */
-  def toKafka(staged: DataFrame, bootstrap: String, topic: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    staged.select(to_json(struct(staged.columns.map(col): _*)).as("value"))
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
   /** Status allow-list + 3-day retention + junk guard
     * (flight_stream.py:238-268). */
   def filterRelevant(parsed: DataFrame, now: Column): DataFrame = {
@@ -193,18 +182,30 @@ object FlightStream {
   def pipeline(raw: DataFrame, now: Column): DataFrame =
     stagingProjection(filterRelevant(parse(raw), now), now)
 
-  /** foreachBatch append sink with empty-batch guard + checkpointing
-    * (flight_stream.py:273-341): at-least-once append; downstream
-    * latest-per-key merge makes the chain effectively-once (ST4). */
+  /** The staging sink (flight_stream.py:273-341) on [[Sinks.start]].
+    * Each epoch owns the files `outDir/epoch-<id>-part-*`: the epoch is
+    * written to a hidden `_epoch-<id>` directory, then its previous
+    * files (from a run the checkpoint never committed) are deleted and
+    * the new ones renamed into place. A replayed epoch therefore
+    * replaces its rows instead of appending them again, and
+    * `spark.read.parquet(outDir)` still reads one flat table with the
+    * staging schema. */
   def startStagingSink(staged: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    staged.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, epochId: Long) =>
-        if (!df.isEmpty) {
-          df.write.mode("append").parquet(outDir)
+    Sinks.start(staged, checkpointDir) { (df, epochId) =>
+      import org.apache.hadoop.fs.Path
+      val (out, tmp) = (new Path(outDir), new Path(outDir, s"_epoch-$epochId"))
+      df.write.mode("overwrite").parquet(tmp.toString)
+      val fs = out.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      val owned = s"epoch-$epochId-"
+      fs.listStatus(out).filter(_.getPath.getName.startsWith(owned))
+        .foreach(st => fs.delete(st.getPath, false))
+      fs.listStatus(tmp).filter(_.getPath.getName.startsWith("part-"))
+        .foreach { st =>
+          val to = new Path(out, owned + st.getPath.getName)
+          if (!fs.rename(st.getPath, to))
+            throw new java.io.IOException(s"staging: rename to $to failed")
         }
-      }
-      .start()
+      fs.delete(tmp, true)
+    }
 }

@@ -7,10 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable bounded state for `foreachBatch` monitor sinks.
   *
-  * The additive-state sinks ([[StreamCuration]] changepoint / CUSUM /
-  * CUPED / isotonic / DeLong / Benford) maintain a small state table
-  * whose merge is exactly additive, which makes each epoch's readout
-  * bit-identical to the batch operator over all arrived rows — but ONLY
+  * The monitor sinks ([[Sinks.additive]] and the CUSUM sink in
+  * [[StreamCuration]]) maintain a small state table whose merge is
+  * exact (additive counts, or CUSUM's prefix step), which makes each
+  * epoch's readout bit-identical to the batch operator over all arrived rows — but ONLY
   * if every arrived batch is merged exactly once. A driver-side
   * `AtomicReference` alone breaks that in two ways:
   *

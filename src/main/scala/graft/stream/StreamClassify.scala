@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Quality
 
 /** Streaming classifier serving — the train-once/serve-many split of
@@ -27,16 +27,10 @@ object StreamClassify {
   def startLangRouteSink(model: Quality.NbModel, docStream: DataFrame,
       idCol: String, textCol: String, checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(Quality.nbClassify(model, batch, col(idCol), col(textCol),
-            materialize = identity), epochId)
-        }
-      }
-      .start()
+    Sinks.start(docStream, checkpointDir) { (batch, epochId) =>
+      sink(Quality.nbClassify(model, batch, col(idCol), col(textCol),
+        materialize = identity), epochId)
+    }
 
   /** Streaming admission via the DISTILLED gate ([[Quality
     * .logregDistill]] trained offline on the expensive rule gate, its
@@ -53,14 +47,8 @@ object StreamClassify {
   def startLogregGateSink(weights: DataFrame, docStream: DataFrame,
       idCol: String, textCol: String, checkpointDir: String,
       sink: (DataFrame, Long) => Unit, nBuckets: Int = 32): StreamingQuery =
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(Quality.logregScore(weights, batch, col(idCol),
-            col(textCol), nBuckets), epochId)
-        }
-      }
-      .start()
+    Sinks.start(docStream, checkpointDir) { (batch, epochId) =>
+      sink(Quality.logregScore(weights, batch, col(idCol),
+        col(textCol), nBuckets), epochId)
+    }
 }

@@ -1,8 +1,9 @@
 package graft.stream
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming example construction — [[graft.ops.Packing.spanCorruption]]
   * on an arriving document stream: each micro-batch of new documents is
@@ -14,39 +15,22 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * at-least-once replay is idempotent. Zero long-lived state; empty
   * batches skip (the S7 guard). The same split as every serving sink
   * here: parameters decided offline, per-batch work purely functional.
+  *
+  * The monitor sinks below keep an additive count table through
+  * [[Sinks.additive]], which persists it per committed epoch under
+  * `checkpointDir/graft-monitor-state`: restarts resume the merged
+  * state, and a replayed epoch re-emits its readout without merging
+  * again. Each sink states only its delta and its readout.
   */
 object StreamCuration {
-
-  /** Null-safe full-outer state merge shared by every count-grid sink:
-    * joins accumulated state `st` with the per-batch delta `part` on
-    * null-safe (`<=>`) equality of `keys` and returns the joined frame
-    * plus the coalesced key columns to re-select. A plain equi-key
-    * `full_outer` would never match a NULL key (a null/uncastable
-    * period, group, value, or bin), so the null-key row would DUPLICATE
-    * in the state every epoch and the readout would diverge from the
-    * batch operator — `<=>` merges it exactly once, the
-    * startBenfordSink discipline applied uniformly (ADVICE r11). */
-  private[stream] def mergeOnKeys(st: DataFrame, part: DataFrame,
-      keys: Seq[String]): (DataFrame, Seq[org.apache.spark.sql.Column]) = {
-    import org.apache.spark.sql.functions.coalesce
-    val cond = keys.map(k => st(k) <=> part(k)).reduce(_ && _)
-    (st.join(part, cond, "full_outer"),
-      keys.map(k => coalesce(st(k), part(k)).as(k)))
-  }
 
   def startSpanCorruptionSink(docStream: DataFrame, idCol: String,
       textCol: String, startPct: Int, spanLen: Int, checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(graft.ops.Packing.spanCorruption(batch, col(idCol),
-            col(textCol), startPct, spanLen), epochId)
-        }
-      }
-      .start()
+    Sinks.start(docStream, checkpointDir) { (batch, epochId) =>
+      sink(graft.ops.Packing.spanCorruption(batch, col(idCol),
+        col(textCol), startPct, spanLen), epochId)
+    }
 
   /** ADMISSION-TIME curation gating — the q182 funnel's per-row gates
     * applied to each arriving micro-batch against STATIC serving
@@ -73,49 +57,42 @@ object StreamCuration {
       benchMask: DataFrame, bits: Int, k: Int,
       checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
     import graft.expr.{Snap, TextStats}
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          val base = batch.select(col(idCol).as("doc_id"),
-            col(textCol).as("text"), col(sourceCol).as("source"))
-          val gopher = TextStats.gopherRules(base, col("doc_id"),
-              col("text"))
-            .select(col("doc_id"), col("keep").as("f_gopher"))
-          val nll = base
-            .select(col("doc_id"),
-              explode(TextStats.tokens(col("text"))).as("term"))
-            .groupBy(col("doc_id"), col("term"))
-            .agg(count(lit(1)).as("tf"))
-            .join(broadcast(probs), Seq("term"), "left")
-            .groupBy(col("doc_id"))
-            .agg(sum(col("tf")).as("n_tok"),
-              round(-Snap.snappedSum(col("tf").cast("double") *
-                  log(coalesce(col("p"), lit(pUnseen))), 1e9) /
-                sum(col("tf")).cast("double"), 4).as("nll"))
-          val contaminated = graft.ops.Sketch.bloomPruneMask(
-              graft.ops.TextDedup.shingleSet(base, col("doc_id"),
-                col("text"), 5),
-              col("shingle"), benchMask, bits, k)
-            .select(col("doc_id")).distinct()
-            .withColumn("f_hit", lit(true))
-          val flags = base.select(col("doc_id"), col("source"))
-            .join(gopher, "doc_id")
-            .join(nll.select(col("doc_id"), col("nll")), "doc_id")
-            .join(broadcast(thresholds), "source")
-            .join(contaminated, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("source"), col("f_gopher"),
-              (col("nll") <= col("threshold")).as("f_nll"),
-              col("f_hit").isNull.as("f_clean"))
-            .withColumn("admit",
-              col("f_gopher") && col("f_nll") && col("f_clean"))
-          sink(flags, epochId)
-        }
-      }
-      .start()
+    Sinks.start(docStream, checkpointDir) { (batch, epochId) =>
+      val base = batch.select(col(idCol).as("doc_id"),
+        col(textCol).as("text"), col(sourceCol).as("source"))
+      val gopher = TextStats.gopherRules(base, col("doc_id"),
+          col("text"))
+        .select(col("doc_id"), col("keep").as("f_gopher"))
+      val nll = base
+        .select(col("doc_id"),
+          explode(TextStats.tokens(col("text"))).as("term"))
+        .groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("tf"))
+        .join(broadcast(probs), Seq("term"), "left")
+        .groupBy(col("doc_id"))
+        .agg(sum(col("tf")).as("n_tok"),
+          round(-Snap.snappedSum(col("tf").cast("double") *
+              log(coalesce(col("p"), lit(pUnseen))), 1e9) /
+            sum(col("tf")).cast("double"), 4).as("nll"))
+      val contaminated = graft.ops.Sketch.bloomPruneMask(
+          graft.ops.TextDedup.shingleSet(base, col("doc_id"),
+            col("text"), 5),
+          col("shingle"), benchMask, bits, k)
+        .select(col("doc_id")).distinct()
+        .withColumn("f_hit", lit(true))
+      val flags = base.select(col("doc_id"), col("source"))
+        .join(gopher, "doc_id")
+        .join(nll.select(col("doc_id"), col("nll")), "doc_id")
+        .join(broadcast(thresholds), "source")
+        .join(contaminated, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("source"), col("f_gopher"),
+          (col("nll") <= col("threshold")).as("f_nll"),
+          col("f_hit").isNull.as("f_clean"))
+        .withColumn("admit",
+          col("f_gopher") && col("f_nll") && col("f_clean"))
+      sink(flags, epochId)
+    }
   }
 
   /** Per-epoch PSI drift of an arriving score stream against a STATIC
@@ -133,71 +110,38 @@ object StreamCuration {
   def startPsiDriftSink(reference: DataFrame, scoreStream: DataFrame,
       grpCol: String, xCol: String, bins: Int, checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    scoreStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(graft.ops.Analytics.psiDrift(reference, batch,
-            col(grpCol), col(xCol), bins, materialize = df => df), epochId)
-        }
-      }
-      .start()
+    Sinks.start(scoreStream, checkpointDir) { (batch, epochId) =>
+      sink(graft.ops.Analytics.psiDrift(reference, batch,
+        col(grpCol), col(xCol), bins, materialize = df => df), epochId)
+    }
+
+  /** The per-period LONG count table shared by the changepoint, trend
+    * and Pettitt sinks: calendar-grid-sized and exactly additive, read
+    * out as the (p, y) series the batch operators take. */
+  private def periodSink(eventStream: DataFrame, periodCol: String,
+      checkpointDir: String, sink: (DataFrame, Long) => Unit)(
+      readout: (DataFrame, Column, Column) => DataFrame): StreamingQuery =
+    Sinks.additive(eventStream, checkpointDir, Seq("p"),
+        StructType.fromDDL("p BIGINT, c BIGINT")) { batch =>
+      batch.select(col(periodCol).cast("long").as("p"))
+        .groupBy(col("p")).agg(count(lit(1)).as("c"))
+    }(st => readout(st.select(col("p"), col("c").cast("double").as("y")),
+      col("p"), col("y")), sink)
 
   /** Streaming changepoint monitor — q276's CUSUM-binseg verdict
     * maintained at ingest (the 19th sink): WHERE did the per-period
     * level shift, re-answered on every micro-batch. State is the
-    * per-period LONG count table — calendar-grid-sized and exactly
-    * additive across any batching or arrival order, so each epoch's
-    * verdict is bit-identical to batch
-    * [[graft.ops.Analytics.changepoint]] over the union of all
-    * arrived events (spec-pinned under shuffled splits) — the same
-    * bounded-state shape as the KM/CIF sinks, applied to the monitor
-    * family next to [[startCusumSink]]'s sequential alarm: CUSUM says
-    * "drifting NOW", this says "the level broke THERE". State is persisted per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): a restarted
-    * query RESUMES the merged state instead of resetting while offsets
-    * advance, and a failure-replayed epoch is detected by id and
-    * re-emitted without re-merging (at-least-once → effectively-once).
-    * */
+    * per-period count table ([[periodSink]]), so each epoch's verdict
+    * is bit-identical to batch [[graft.ops.Analytics.changepoint]]
+    * over the union of all arrived events (spec-pinned under shuffled
+    * splits) — the monitor family next to [[startCusumSink]]'s
+    * sequential alarm: CUSUM says "drifting NOW", this says "the level
+    * broke THERE". */
   def startChangepointSink(eventStream: DataFrame, periodCol: String,
       checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = eventStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("p",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("c",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    def readout(st: DataFrame) = graft.ops.Analytics.changepoint(
-      st.select(col("p"), col("c").cast("double").as("y")),
-      col("p"), col("y"))
-    eventStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          // at-least-once replay: state already holds this epoch —
-          // re-emit its readout idempotently, never re-merge
-          if (state.isLast(epochId)) sink(readout(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val st = state.get
-          val part = batch.select(col(periodCol).cast("long").as("p"))
-            .groupBy(col("p")).agg(count(lit(1)).as("c"))
-          val (j, ks) = mergeOnKeys(st, part, Seq("p"))
-          val next = j.select(ks :+
-            (coalesce(st("c"), lit(0L)) +
-              coalesce(part("c"), lit(0L))).as("c"): _*)
-          sink(readout(state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    periodSink(eventStream, periodCol, checkpointDir, sink)(
+      graft.ops.Analytics.changepoint)
 
   /** Streaming one-sided CUSUM monitor — the SEQUENTIAL drift alarm
     * ([[graft.ops.Analytics.cusumDrift]]) run where it naturally lives:
@@ -211,31 +155,20 @@ object StreamCuration {
     * operator uses, so stream state after N epochs ≡ batch cusumDrift
     * row N with `mu0 = Some(mu)` (QualitySpec pins this). Groups
     * absent from a batch take no step; new groups start their own
-    * recursion. State is group-count-sized, re-materialized per batch
-    * with truncated lineage. State is persisted per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): a restarted
-    * query RESUMES the merged state instead of resetting while offsets
-    * advance, and a failure-replayed epoch is detected by id and
-    * re-emitted without re-merging (at-least-once → effectively-once).
-    * */
+    * recursion. The prefix-min is not additive, so this sink keeps its
+    * own step and replay branch on a [[MonitorState]] persisted under
+    * `checkpointDir/graft-monitor-state`: a restarted query resumes
+    * the state, and a replayed epoch re-emits without stepping again. */
   def startCusumSink(countStream: DataFrame, grpCol: String, xCol: String,
       mu: Double, slack: Double, hMult: Double, checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = countStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        // snapped-integer state as DECIMAL(38,0) — the batch
-        // operator's width argument (a 1e9-rate series outgrows long)
-        org.apache.spark.sql.types.StructField("c",
-          org.apache.spark.sql.types.DecimalType(38, 0)),
-        org.apache.spark.sql.types.StructField("m",
-          org.apache.spark.sql.types.DecimalType(38, 0)))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
+    // snapped-integer state as DECIMAL(38,0) — the batch operator's
+    // width argument (a 1e9-rate series outgrows long)
+    val state = new MonitorState(countStream.sparkSession,
+      checkpointDir + "/graft-monitor-state",
+      countStream.sparkSession.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        StructType.fromDDL("grp STRING, c DECIMAL(38,0), m DECIMAL(38,0)")))
     val dec0 = lit(0).cast("decimal(38,0)")
     def stepOf(batch: DataFrame) = batch.groupBy(col(grpCol).as("grp"))
       .agg(sum(col(xCol)).as("x"))
@@ -248,43 +181,39 @@ object StreamCuration {
           lit(1e9), 6).as("cusum"),
         ((col("cn") - least(col("mn"), dec0)).cast("double") /
           lit(1e9) > lit(mu) * lit(hMult)).as("alarm")), epochId)
-    countStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          // at-least-once replay: the state already took this epoch's
-          // step — the original emission's (cn, mn) ARE the post-merge
-          // (c, m), so rebuild it from batch groups × current state
-          // without stepping again
-          if (state.isLast(epochId) && !batch.isEmpty) {
-            emit(stepOf(batch).drop("d")
-              .join(state.get, Seq("grp"), "inner")
-              .withColumnRenamed("c", "cn").withColumnRenamed("m", "mn"),
-              epochId)
-          }
-        } else if (!batch.isEmpty) {
-          // one step per group: the batch's total x, snapped deviation
-          // (the cusumDrift dI expression with mu as the fixed literal)
-          val stepX = stepOf(batch)
-          val upd = stepX.join(state.get, Seq("grp"), "left")
-            .withColumn("cn", (coalesce(col("c"), dec0) + col("d"))
-              .cast("decimal(38,0)"))
-            .withColumn("mn", least(coalesce(col("m"), col("cn")),
-              col("cn")))
-          val keep = state.get.join(stepX.select(col("grp")),
-            Seq("grp"), "left_anti")
-          val next = upd.select(col("grp"), col("cn").as("c"),
-            col("mn").as("m")).unionByName(keep)
-          // materialize the emission's inputs BEFORE commit replaces
-          // the state dir the lineage reads from
-          val out = upd.select(col("grp"), col("x"), col("cn"),
-            col("mn")).localCheckpoint(true)
-          state.commit(next, epochId)
-          emit(out, epochId)
+    Sinks.start(countStream, checkpointDir) { (batch, epochId) =>
+      if (state.alreadyMerged(epochId)) {
+        // at-least-once replay: the state already took this epoch's
+        // step — the original emission's (cn, mn) ARE the post-merge
+        // (c, m), so rebuild it from batch groups × current state
+        // without stepping again
+        if (state.isLast(epochId)) {
+          emit(stepOf(batch).drop("d")
+            .join(state.get, Seq("grp"), "inner")
+            .withColumnRenamed("c", "cn").withColumnRenamed("m", "mn"),
+            epochId)
         }
+      } else {
+        // one step per group: the batch's total x, snapped deviation
+        // (the cusumDrift dI expression with mu as the fixed literal)
+        val stepX = stepOf(batch)
+        val upd = stepX.join(state.get, Seq("grp"), "left")
+          .withColumn("cn", (coalesce(col("c"), dec0) + col("d"))
+            .cast("decimal(38,0)"))
+          .withColumn("mn", least(coalesce(col("m"), col("cn")),
+            col("cn")))
+        val keep = state.get.join(stepX.select(col("grp")),
+          Seq("grp"), "left_anti")
+        val next = upd.select(col("grp"), col("cn").as("c"),
+          col("mn").as("m")).unionByName(keep)
+        // materialize the emission's inputs BEFORE commit replaces
+        // the state dir the lineage reads from
+        val out = upd.select(col("grp"), col("x"), col("cn"),
+          col("mn")).localCheckpoint(true)
+        state.commit(next, epochId)
+        emit(out, epochId)
       }
-      .start()
+    }
   }
 
   /** Streaming CUPED readout — q248 maintained at ingest
@@ -300,70 +229,31 @@ object StreamCuration {
     * unit, never an event list). The pre/post cut and the arm rule are
     * offline decisions (the train-once/serve-many split); units whose
     * events all precede the cut still enter with y = 0 — exactly the
-    * batch operator's population. State is persisted per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): a restarted
-    * query RESUMES the merged state instead of resetting while offsets
-    * advance, and a failure-replayed epoch is detected by id and
-    * re-emitted without re-merging (at-least-once → effectively-once).
-    * */
+    * batch operator's population. */
   def startCupedSink(eventStream: DataFrame, unitCol: String,
       tsCol: String, valueCol: String, cutTs: String,
       checkpointDir: String, sink: (DataFrame, Long) => Unit,
-      isA: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        u => org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.conv(
-            org.apache.spark.sql.functions.substring(
-              org.apache.spark.sql.functions.md5(u.cast("string")), 1, 8),
-            16, 10).cast("long"),
-          org.apache.spark.sql.functions.lit(100L)) <
-          org.apache.spark.sql.functions.lit(50L)): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = eventStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("u",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("x9",
-          org.apache.spark.sql.types.DecimalType(38, 0)),
-        org.apache.spark.sql.types.StructField("y9",
-          org.apache.spark.sql.types.DecimalType(38, 0)))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
+      isA: Column => Column = u => pmod(conv(substring(
+        md5(u.cast("string")), 1, 8), 16, 10).cast("long"), lit(100L)) <
+        lit(50L)): StreamingQuery = {
     val cut = lit(cutTs).cast("timestamp")
-    def readout(st: DataFrame) = graft.ops.Analytics.cupedAdjust(
+    def snap9(c: Column) =
+      sum(floor(c * lit(1e9) + lit(0.5)).cast("decimal(38,0)"))
+    Sinks.additive(eventStream, checkpointDir, Seq("u"),
+        StructType.fromDDL("u STRING, x9 DECIMAL(38,0), y9 DECIMAL(38,0)")) {
+      batch => batch.select(col(unitCol).cast("string").as("u"),
+          col(tsCol).cast("timestamp").as("ts"),
+          col(valueCol).cast("double").as("v"))
+        .groupBy(col("u"))
+        .agg(snap9(when(col("ts") < cut, col("v")).otherwise(lit(0.0)))
+            .as("x9"),
+          snap9(when(col("ts") >= cut, col("v")).otherwise(lit(0.0)))
+            .as("y9"))
+    }(st => graft.ops.Analytics.cupedAdjust(
       st.select(col("u"),
         (col("x9").cast("double") / lit(1e9)).as("x"),
         (col("y9").cast("double") / lit(1e9)).as("y")),
-      isA(col("u")), col("x"), col("y"), materialize = df => df)
-    eventStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId)) sink(readout(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val dec0 = lit(0).cast("decimal(38,0)")
-          def snap9(c: org.apache.spark.sql.Column) =
-            sum(floor(c * lit(1e9) + lit(0.5)).cast("decimal(38,0)"))
-          val part = batch.select(col(unitCol).cast("string").as("u"),
-              col(tsCol).cast("timestamp").as("ts"),
-              col(valueCol).cast("double").as("v"))
-            .groupBy(col("u"))
-            .agg(snap9(when(col("ts") < cut, col("v")).otherwise(lit(0.0)))
-                .as("dx"),
-              snap9(when(col("ts") >= cut, col("v")).otherwise(lit(0.0)))
-                .as("dy"))
-          val (j, ks) = mergeOnKeys(state.get, part, Seq("u"))
-          val next = j.select(ks ++ Seq(
-            (coalesce(col("x9"), dec0) + coalesce(col("dx"), dec0))
-              .cast("decimal(38,0)").as("x9"),
-            (coalesce(col("y9"), dec0) + coalesce(col("dy"), dec0))
-              .cast("decimal(38,0)").as("y9")): _*)
-          sink(readout(state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
+      isA(col("u")), col("x"), col("y"), materialize = df => df), sink)
   }
 
   /** q288's isotonic calibration maintained at INGEST — the 20th sink:
@@ -374,64 +264,27 @@ object StreamCuration {
     * so each epoch's emitted curve is bit-identical to batch
     * `isotonicCalibration` over the union of all arrived predictions,
     * under any batch split (spec-pinned). State is ≤`bins` rows —
-    * bounded regardless of stream length. State is persisted per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): a restarted
-    * query RESUMES the merged state instead of resetting while offsets
-    * advance, and a failure-replayed epoch is detected by id and
-    * re-emitted without re-merging (at-least-once → effectively-once).
-    * */
+    * bounded regardless of stream length. */
   def startIsotonicSink(predStream: DataFrame, confCol: String,
       correctCol: String, bins: Int, checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
     require(bins > 0, s"startIsotonicSink: bins=$bins")
-    val spark0 = predStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bin",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("s9",
-          org.apache.spark.sql.types.DecimalType(38, 0)))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    def readout(st: DataFrame) = graft.ops.Quality.isotonicFromBins(
+    Sinks.additive(predStream, checkpointDir, Seq("bin"),
+        StructType.fromDDL("bin BIGINT, n BIGINT, k BIGINT, " +
+          "s9 DECIMAL(38,0)")) {
+      batch => batch.select(
+          least(floor(col(confCol).cast("double") * lit(bins))
+            .cast("long"), lit(bins - 1L)).as("bin"),
+          col(confCol).cast("double").as("conf"),
+          when(col(correctCol).cast("boolean"), 1L).otherwise(0L)
+            .as("ok"))
+        .groupBy(col("bin"))
+        .agg(count(lit(1)).as("n"), sum(col("ok")).as("k"),
+          sum(floor(col("conf") * lit(1e9) + lit(0.5))
+            .cast("decimal(38,0)")).as("s9"))
+    }(st => graft.ops.Quality.isotonicFromBins(
       st.select(col("bin"), col("n"), col("k"),
-        (col("s9").cast("double") / lit(1e9)).as("sc")))
-    predStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId)) sink(readout(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val dec0 = lit(0).cast("decimal(38,0)")
-          val part = batch.select(
-              least(floor(col(confCol).cast("double") * lit(bins))
-                .cast("long"), lit(bins - 1L)).as("bin"),
-              col(confCol).cast("double").as("conf"),
-              when(col(correctCol).cast("boolean"), 1L).otherwise(0L)
-                .as("ok"))
-            .groupBy(col("bin"))
-            .agg(count(lit(1)).as("dn"), sum(col("ok")).as("dk"),
-              sum(floor(col("conf") * lit(1e9) + lit(0.5))
-                .cast("decimal(38,0)")).as("ds9"))
-          val (j, ks) = mergeOnKeys(state.get, part, Seq("bin"))
-          val next = j.select(ks ++ Seq(
-            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-              .as("n"),
-            (coalesce(col("k"), lit(0L)) + coalesce(col("dk"), lit(0L)))
-              .as("k"),
-            (coalesce(col("s9"), dec0) + coalesce(col("ds9"), dec0))
-              .cast("decimal(38,0)").as("s9")): _*)
-          sink(readout(state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
+        (col("s9").cast("double") / lit(1e9)).as("sc"))), sink)
   }
 
   /** q297's DeLong AUC interval maintained at INGEST — the 21st sink:
@@ -442,55 +295,20 @@ object StreamCuration {
     * additive, so each epoch's (auc, se, ci) is bit-identical to
     * batch `delongAuc` over the union of all arrived rows under any
     * batch split (spec-pinned). State is grid-bounded (≤10⁶+1 rows
-    * for [0,1] scores) regardless of stream length. State is persisted per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): a restarted
-    * query RESUMES the merged state instead of resetting while offsets
-    * advance, and a failure-replayed epoch is detected by id and
-    * re-emitted without re-merging (at-least-once → effectively-once).
-    * */
+    * for [0,1] scores) regardless of stream length. */
   def startDelongSink(predStream: DataFrame, scoreCol: String,
       positiveCol: String, checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = predStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("s",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("np",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("nn",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    predStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId))
-            sink(graft.ops.Quality.delongFromGrid(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val part = batch.select(
-              round(col(scoreCol).cast("double"), 6).as("s"),
-              when(col(positiveCol).cast("boolean"), 1L).otherwise(0L)
-                .as("pos"))
-            .groupBy(col("s"))
-            .agg(sum(col("pos")).as("dnp"),
-              sum(lit(1L) - col("pos")).as("dnn"))
-          val (j, ks) = mergeOnKeys(state.get, part, Seq("s"))
-          val next = j.select(ks ++ Seq(
-            (coalesce(col("np"), lit(0L)) + coalesce(col("dnp"), lit(0L)))
-              .as("np"),
-            (coalesce(col("nn"), lit(0L)) + coalesce(col("dnn"), lit(0L)))
-              .as("nn")): _*)
-          sink(graft.ops.Quality.delongFromGrid(
-            state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    Sinks.additive(predStream, checkpointDir, Seq("s"),
+        StructType.fromDDL("s DOUBLE, np BIGINT, nn BIGINT")) {
+      batch => batch.select(
+          round(col(scoreCol).cast("double"), 6).as("s"),
+          when(col(positiveCol).cast("boolean"), 1L).otherwise(0L)
+            .as("pos"))
+        .groupBy(col("s"))
+        .agg(sum(col("pos")).as("np"),
+          sum(lit(1L) - col("pos")).as("nn"))
+    }(graft.ops.Quality.delongFromGrid, sink)
 
   /** q293's Benford conformity maintained at INGEST — the 22nd sink:
     * the cheapest live fabricated/truncated-amounts tripwire. State
@@ -499,50 +317,19 @@ object StreamCuration {
     * [[graft.ops.Quality.benfordFromDigits]]'s input — purely
     * additive, so each epoch's χ²/reject is bit-identical to batch
     * `benfordReport` over all arrived values under any split
-    * (spec-pinned). State is persisted per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): a restarted
-    * query RESUMES the merged state instead of resetting while offsets
-    * advance, and a failure-replayed epoch is detected by id and
-    * re-emitted without re-merging (at-least-once → effectively-once).
-    * */
+    * (spec-pinned). */
   def startBenfordSink(valueStream: DataFrame, valueCol: String,
       checkpointDir: String, sink: (DataFrame, Long) => Unit,
       scale: Int = 100): StreamingQuery = {
-    import org.apache.spark.sql.functions._
     require(scale > 0, s"startBenfordSink: scale=$scale")
-    val spark0 = valueStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("d",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    valueStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId))
-            sink(graft.ops.Quality.benfordFromDigits(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val c = floor(col(valueCol).cast("double") * lit(scale) +
-            lit(0.5)).cast("long")
-          val part = batch.select(when(c > 0L,
-              substring(c.cast("string"), 1, 1).cast("long")).as("d"))
-            .groupBy(col("d")).agg(count(lit(1)).as("dd"))
-          val st = state.get
-          val (j, ks) = mergeOnKeys(st, part, Seq("d"))
-          val next = j.select(ks :+
-            (coalesce(col("o"), lit(0L)) + coalesce(col("dd"), lit(0L)))
-              .as("o"): _*)
-          sink(graft.ops.Quality.benfordFromDigits(
-            state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
+    val c = floor(col(valueCol).cast("double") * lit(scale) +
+      lit(0.5)).cast("long")
+    Sinks.additive(valueStream, checkpointDir, Seq("d"),
+        StructType.fromDDL("d BIGINT, o BIGINT")) {
+      batch => batch.select(when(c > 0L,
+          substring(c.cast("string"), 1, 1).cast("long")).as("d"))
+        .groupBy(col("d")).agg(count(lit(1)).as("o"))
+    }(graft.ops.Quality.benfordFromDigits, sink)
   }
 
   /** q312's Mann–Kendall trend verdict maintained at INGEST — the 24th
@@ -550,49 +337,15 @@ object StreamCuration {
     * micro-batch (the monotone-trend complement to
     * [[startChangepointSink]]'s level-break WHERE and
     * [[startCusumSink]]'s drifting NOW). State is the same per-period
-    * LONG count table as the changepoint sink — calendar-grid-sized,
-    * exactly additive — so each epoch's (S, var, z, p, trend) is
-    * bit-identical to batch [[graft.ops.Analytics.mannKendall]] over
-    * the union of all arrived events under any batch split
-    * (spec-pinned). State is persisted per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): restarts
-    * RESUME, replayed epochs re-emit without re-merging. */
+    * count table as the changepoint sink ([[periodSink]]), so each
+    * epoch's (S, var, z, p, trend) is bit-identical to batch
+    * [[graft.ops.Analytics.mannKendall]] over the union of all arrived
+    * events under any batch split (spec-pinned). */
   def startTrendSink(eventStream: DataFrame, periodCol: String,
       checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = eventStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("p",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("c",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    def readout(st: DataFrame) = graft.ops.Analytics.mannKendall(
-      st.select(col("p"), col("c").cast("double").as("y")),
-      col("p"), col("y"))
-    eventStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId)) sink(readout(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val st = state.get
-          val part = batch.select(col(periodCol).cast("long").as("p"))
-            .groupBy(col("p")).agg(count(lit(1)).as("c"))
-          val (j, ks) = mergeOnKeys(st, part, Seq("p"))
-          val next = j.select(ks :+
-            (coalesce(st("c"), lit(0L)) +
-              coalesce(part("c"), lit(0L))).as("c"): _*)
-          sink(readout(state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    periodSink(eventStream, periodCol, checkpointDir, sink)(
+      graft.ops.Analytics.mannKendall)
 
   /** q338's Qini uplift curve maintained at INGEST — the 29th sink:
     * live targeting-quality monitoring of a RUNNING experiment, the
@@ -606,58 +359,28 @@ object StreamCuration {
     * additive and `bins`-bounded — so each epoch's curve + coefficient
     * is bit-identical to the batch computation over all arrived units
     * binned against the same scoreMax under any batch split
-    * (spec-pinned). State persists per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): restarts
-    * RESUME, replayed epochs re-emit without re-merging. */
+    * (spec-pinned). */
   def startQiniSink(unitStream: DataFrame, treatedCol: String,
       scoreCol: String, convertedCol: String, scoreMax: Double,
       bins: Int, checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
     require(bins >= 2 && scoreMax > 0.0,
       s"startQiniSink: bins=$bins scoreMax=$scoreMax")
-    val spark0 = unitStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq("bin", "nt", "ct",
-        "nc", "cc").map(n => org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    unitStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId))
-            sink(graft.ops.Analytics.qiniFromGrid(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val part = batch.select(
-              col(treatedCol).cast("boolean").as("t"),
-              graft.ops.Analytics.qiniBin(col(scoreCol).cast("double"),
-                lit(scoreMax), bins).as("bin"),
-              when(col(convertedCol).cast("boolean"), 1L).otherwise(0L)
-                .as("y"))
-            .groupBy(col("bin"))
-            .agg(sum(when(col("t"), 1L).otherwise(0L)).as("dnt"),
-              sum(when(col("t"), col("y")).otherwise(0L)).as("dct"),
-              sum(when(!col("t"), 1L).otherwise(0L)).as("dnc"),
-              sum(when(!col("t"), col("y")).otherwise(0L)).as("dcc"))
-          val (j, ks) = mergeOnKeys(state.get, part, Seq("bin"))
-          val next = j.select(ks ++ Seq(
-            (coalesce(col("nt"), lit(0L)) + coalesce(col("dnt"), lit(0L)))
-              .as("nt"),
-            (coalesce(col("ct"), lit(0L)) + coalesce(col("dct"), lit(0L)))
-              .as("ct"),
-            (coalesce(col("nc"), lit(0L)) + coalesce(col("dnc"), lit(0L)))
-              .as("nc"),
-            (coalesce(col("cc"), lit(0L)) + coalesce(col("dcc"), lit(0L)))
-              .as("cc")): _*)
-          sink(graft.ops.Analytics.qiniFromGrid(
-            state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
+    Sinks.additive(unitStream, checkpointDir, Seq("bin"),
+        StructType.fromDDL("bin BIGINT, nt BIGINT, ct BIGINT, " +
+          "nc BIGINT, cc BIGINT")) {
+      batch => batch.select(
+          col(treatedCol).cast("boolean").as("t"),
+          graft.ops.Analytics.qiniBin(col(scoreCol).cast("double"),
+            lit(scoreMax), bins).as("bin"),
+          when(col(convertedCol).cast("boolean"), 1L).otherwise(0L)
+            .as("y"))
+        .groupBy(col("bin"))
+        .agg(sum(when(col("t"), 1L).otherwise(0L)).as("nt"),
+          sum(when(col("t"), col("y")).otherwise(0L)).as("ct"),
+          sum(when(!col("t"), 1L).otherwise(0L)).as("nc"),
+          sum(when(!col("t"), col("y")).otherwise(0L)).as("cc"))
+    }(graft.ops.Analytics.qiniFromGrid, sink)
   }
 
   /** q335's cross-modal retrieval-quality eval maintained at INGEST —
@@ -673,65 +396,30 @@ object StreamCuration {
     * is [[graft.ops.Multimodal.crossModalHitCells]]'s (method, k,
     * n_queries, hits) grid — purely additive and 2·|ks|-bounded — and
     * each epoch's recall@k readout is bit-identical to the batch eval
-    * of ALL arrived queries under any batch split (spec-pinned).
-    * State persists per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): restarts
-    * RESUME, replayed epochs re-emit without re-merging. */
+    * of ALL arrived queries under any batch split (spec-pinned). */
   def startCrossModalRecallSink(docStream: DataFrame, idCol: String,
       payloadCol: String, indexMedia: DataFrame, indexId: String,
       indexPayload: String, ks: Seq[Int], checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
     require(ks.nonEmpty && ks.forall(_ >= 1),
       s"startCrossModalRecallSink: ks=$ks")
     // duplicate (method, k) keys would cross-multiply state rows in
     // the full-outer merge every epoch (ADVICE r13)
     require(ks.distinct.size == ks.size,
       s"startCrossModalRecallSink: duplicate k in $ks")
-    val spark0 = docStream.sparkSession
     val corpus = graft.ops.Multimodal.crossModalCorpus(indexMedia,
       col(indexId), col(indexPayload)).localCheckpoint(eager = true)
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("method",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_queries",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("hits",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId)) sink(graft.ops.Multimodal
-            .crossModalFromCells(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val feats = batch.select(
-            col(idCol).cast("long").as("doc_id"),
-            graft.ops.Multimodal.mediaFeatureArray(col(payloadCol))
-              .as("feat"))
-          val part = graft.ops.Multimodal.crossModalHitCells(corpus,
-              graft.ops.Multimodal.crossModalQueries(feats), ks)
-            .select(col("method"), col("k"),
-              col("n_queries").as("dnq"), col("hits").as("dh"))
-          val (j, kcols) = mergeOnKeys(state.get, part,
-            Seq("method", "k"))
-          val next = j.select(kcols ++ Seq(
-            (coalesce(col("n_queries"), lit(0L)) +
-              coalesce(col("dnq"), lit(0L))).as("n_queries"),
-            (coalesce(col("hits"), lit(0L)) +
-              coalesce(col("dh"), lit(0L))).as("hits")): _*)
-          sink(graft.ops.Multimodal.crossModalFromCells(
-            state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
+    Sinks.additive(docStream, checkpointDir, Seq("method", "k"),
+        StructType.fromDDL("method STRING, k BIGINT, n_queries BIGINT, " +
+          "hits BIGINT")) { batch =>
+      val feats = batch.select(
+        col(idCol).cast("long").as("doc_id"),
+        graft.ops.Multimodal.mediaFeatureArray(col(payloadCol))
+          .as("feat"))
+      graft.ops.Multimodal.crossModalHitCells(corpus,
+          graft.ops.Multimodal.crossModalQueries(feats), ks)
+        .select(col("method"), col("k"), col("n_queries"), col("hits"))
+    }(graft.ops.Multimodal.crossModalFromCells, sink)
   }
 
   /** Serving diversity monitored at INGEST — the 31st sink: as query
@@ -749,66 +437,30 @@ object StreamCuration {
     * each epoch's readout is bit-identical to the batch eval of ALL
     * arrived queries under any batch split (spec-pinned). A query
     * whose id collides with an index id is excluded from its own
-    * candidates (the shortlist's standard self-exclusion). State
-    * persists per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): restarts
-    * RESUME, replayed epochs re-emit without re-merging. */
+    * candidates (the shortlist's standard self-exclusion). */
   def startMmrDiversitySink(queryStream: DataFrame, idCol: String,
       vecCol: String, index: DataFrame, indexId: String,
       indexVec: String, shortlist: Int, k: Int, lambda: Double,
       checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
     require(shortlist >= k && k >= 1,
       s"startMmrDiversitySink: shortlist=$shortlist k=$k")
     require(lambda >= 0.0 && lambda <= 1.0,
       s"startMmrDiversitySink: lambda=$lambda")
-    val spark0 = queryStream.sparkSession
     // the serving index embeds once per sink lifetime — the
     // train-once/serve-many contract the cross-modal sink established
     val corpus = index.select(col(indexId).cast("long").as("vec_id"),
         col(indexVec).cast("array<double>").as("embedding"))
       .localCheckpoint(eager = true)
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_queries",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("rel_sum_l",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("maxsim_sum_l",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    queryStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId)) sink(
-            graft.ops.Ann.mmrFromCells(state.get, lambda), epochId)
-        } else if (!batch.isEmpty) {
-          val qs = batch.select(col(idCol).cast("long").as("vec_id"),
-            col(vecCol).cast("array<double>").as("embedding"))
-          val part = graft.ops.Ann.mmrPositionCells(corpus, qs,
-              shortlist, k, lambda)
-            .select(col("pos"), col("n_queries").as("dn"),
-              col("rel_sum_l").as("dr"), col("maxsim_sum_l").as("dm"))
-          val (j, kcols) = mergeOnKeys(state.get, part, Seq("pos"))
-          val next = j.select(kcols ++ Seq(
-            (coalesce(col("n_queries"), lit(0L)) +
-              coalesce(col("dn"), lit(0L))).as("n_queries"),
-            (coalesce(col("rel_sum_l"), lit(0L)) +
-              coalesce(col("dr"), lit(0L))).as("rel_sum_l"),
-            (coalesce(col("maxsim_sum_l"), lit(0L)) +
-              coalesce(col("dm"), lit(0L))).as("maxsim_sum_l")): _*)
-          sink(graft.ops.Ann.mmrFromCells(
-            state.commit(next, epochId), lambda), epochId)
-        }
-      }
-      .start()
+    Sinks.additive(queryStream, checkpointDir, Seq("pos"),
+        StructType.fromDDL("pos BIGINT, n_queries BIGINT, " +
+          "rel_sum_l BIGINT, maxsim_sum_l BIGINT")) { batch =>
+      val qs = batch.select(col(idCol).cast("long").as("vec_id"),
+        col(vecCol).cast("array<double>").as("embedding"))
+      graft.ops.Ann.mmrPositionCells(corpus, qs, shortlist, k, lambda)
+        .select(col("pos"), col("n_queries"), col("rel_sum_l"),
+          col("maxsim_sum_l"))
+    }(graft.ops.Ann.mmrFromCells(_, lambda), sink)
   }
 
   /** The privacy TRIAD maintained at INGEST — the 28th sink: is the
@@ -822,32 +474,17 @@ object StreamCuration {
     * [[graft.ops.Quality.tClosenessFromCells]] under any batch split,
     * spec-pinned). The sensitive attribute is a caller-cast LONG (an
     * ordered grid — t-closeness is the ordered-EMD form); state is
-    * (classes × sensitive grid)-bounded. State persists per committed
-    * epoch under `checkpointDir/graft-monitor-state` ([[MonitorState]]):
-    * restarts RESUME, replayed epochs re-emit without re-merging. */
+    * (classes × sensitive grid)-bounded. */
   def startPrivacySink(docStream: DataFrame, quasiCols: Seq[String],
       sensitiveCol: String, k: Long, l: Double, t: Double,
       checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
     require(quasiCols.nonEmpty, "startPrivacySink: no quasi columns")
-    val spark0 = docStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(
-        quasiCols.map(q => org.apache.spark.sql.types.StructField(q,
-          org.apache.spark.sql.types.StringType)) ++ Seq(
-          org.apache.spark.sql.types.StructField("__s",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("nv",
-            org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
     def readout(cells: DataFrame): DataFrame = {
       val ld = graft.ops.Quality.lDiversityFromCells(cells, quasiCols, l)
       val tc = graft.ops.Quality.tClosenessFromCells(cells, quasiCols, t)
-      // null-safe: mergeOnKeys deliberately keeps a NULL-keyed class
-      // in state — a plain equi-join here would silently drop that
+      // null-safe: the state merge deliberately keeps a NULL-keyed
+      // class — a plain equi-join here would silently drop that
       // class from the released audit, the exact failure a privacy
       // tripwire exists to prevent (ADVICE r12)
       graft.ops.Quality.nsJoin(ld,
@@ -855,27 +492,16 @@ object StreamCuration {
             col("close")): _*), quasiCols)
         .withColumn("k_anonymous", col("n_rows") >= k)
     }
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId)) sink(readout(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val part = batch.select(
-              (quasiCols.map(q => col(q).cast("string").as(q)) :+
-                col(sensitiveCol).cast("long").as("__s")): _*)
-            .groupBy((quasiCols :+ "__s").map(col): _*)
-            .agg(count(lit(1)).as("dnv"))
-          val keys = quasiCols :+ "__s"
-          val (j, ks) = mergeOnKeys(state.get, part, keys)
-          val next = j.select(ks :+
-            (coalesce(col("nv"), lit(0L)) + coalesce(col("dnv"), lit(0L)))
-              .as("nv"): _*)
-          sink(readout(state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
+    val keys = quasiCols :+ "__s"
+    Sinks.additive(docStream, checkpointDir, keys,
+        StructType(quasiCols.map(StructField(_, StringType)))
+          .add("__s", LongType).add("nv", LongType)) {
+      batch => batch.select(
+          (quasiCols.map(q => col(q).cast("string").as(q)) :+
+            col(sensitiveCol).cast("long").as("__s")): _*)
+        .groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("nv"))
+    }(readout, sink)
   }
 
   /** q285's Pettitt rank-based changepoint maintained at INGEST — the
@@ -883,231 +509,79 @@ object StreamCuration {
     * not means — one wild day cannot drag the split) on every
     * micro-batch. Completes the live changepoint pair:
     * [[startChangepointSink]] is the mean-based CUSUM binseg, this is
-    * its outlier-robust sibling, on the IDENTICAL per-period LONG
-    * count state (calendar-grid-sized, exactly additive, null-safe
-    * merged) — so each epoch's (n_periods, split_period, k_stat,
-    * p_value) is bit-identical to batch [[graft.ops.Analytics
-    * .pettitt]] over the union of all arrived events under any batch
-    * split (spec-pinned). State persists per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): restarts
-    * RESUME, replayed epochs re-emit without re-merging. */
+    * its outlier-robust sibling, on the IDENTICAL per-period count
+    * state ([[periodSink]]) — so each epoch's (n_periods,
+    * split_period, k_stat, p_value) is bit-identical to batch
+    * [[graft.ops.Analytics.pettitt]] over the union of all arrived
+    * events under any batch split (spec-pinned). */
   def startPettittSink(eventStream: DataFrame, periodCol: String,
       checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = eventStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("p",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("c",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    def readout(st: DataFrame) = graft.ops.Analytics.pettitt(
-      st.select(col("p"), col("c").cast("double").as("y")),
-      col("p"), col("y"))
-    eventStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId)) sink(readout(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val st = state.get
-          val part = batch.select(col(periodCol).cast("long").as("p"))
-            .groupBy(col("p")).agg(count(lit(1)).as("c"))
-          val (j, ks) = mergeOnKeys(st, part, Seq("p"))
-          val next = j.select(ks :+
-            (coalesce(st("c"), lit(0L)) +
-              coalesce(part("c"), lit(0L))).as("c"): _*)
-          sink(readout(state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    periodSink(eventStream, periodCol, checkpointDir, sink)(
+      graft.ops.Analytics.pettitt)
+
+  /** The per-(group, value) two-sample class-count grid shared by the
+    * CvM, KS and Wasserstein sinks: `halfCol` = "e" (expected) or "a"
+    * (actual) — both arms may stream; a fixed reference is just an
+    * "e"-only first batch. Counts are purely additive and the grid is
+    * value-bounded (the q137 bounded-distinct discipline) regardless
+    * of stream length. */
+  private def twoSampleSink(obsStream: DataFrame, grpCol: String,
+      xCol: String, halfCol: String, checkpointDir: String,
+      sink: (DataFrame, Long) => Unit)(
+      readout: DataFrame => DataFrame): StreamingQuery =
+    Sinks.additive(obsStream, checkpointDir, Seq("grp", "x"),
+        StructType.fromDDL("grp STRING, x DOUBLE, ce BIGINT, ca BIGINT")) {
+      batch => batch.select(col(grpCol).cast("string").as("grp"),
+          col(xCol).cast("double").as("x"),
+          col(halfCol).cast("string").as("half"))
+        .groupBy(col("grp"), col("x"))
+        .agg(sum(when(col("half") === "e", 1L).otherwise(0L)).as("ce"),
+          sum(when(col("half") === "a", 1L).otherwise(0L)).as("ca"))
+    }(readout, sink)
 
   /** q283's Cramér–von Mises two-sample drift maintained at INGEST —
     * the 23rd sink: the INTEGRATED-CDF distribution monitor run live
-    * over a stream of (group, value, half) observations (half = "e"
-    * expected / "a" actual — both arms may stream; a fixed reference
-    * is just an "e"-only first batch). State is the per-(group, value)
-    * class-count grid — exactly
-    * [[graft.ops.Analytics.cvmFromGrid]]'s input — and counts are
-    * purely additive, so each epoch's (t, reject) is bit-identical to
-    * batch `cvmDrift` over the union of all arrived rows under any
-    * batch split (spec-pinned). State is value-grid-bounded (the q137
-    * bounded-distinct discipline) regardless of stream length.
-    * State is persisted per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): a
-    * restarted query RESUMES the merged state instead of resetting
-    * while offsets advance, and a failure-replayed epoch is detected
-    * by id and re-emitted without re-merging (at-least-once →
-    * effectively-once). */
+    * over a stream of (group, value, half) observations. State is the
+    * two-sample grid ([[twoSampleSink]]) — exactly
+    * [[graft.ops.Analytics.cvmFromGrid]]'s input — so each epoch's
+    * (t, reject) is bit-identical to batch `cvmDrift` over the union
+    * of all arrived rows under any batch split (spec-pinned). */
   def startCvmSink(obsStream: DataFrame, grpCol: String, xCol: String,
       halfCol: String, checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = obsStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("x",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("ce",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ca",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    obsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId))
-            sink(graft.ops.Analytics.cvmFromGrid(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val part = batch.select(col(grpCol).cast("string").as("grp"),
-              col(xCol).cast("double").as("x"),
-              col(halfCol).cast("string").as("half"))
-            .groupBy(col("grp"), col("x"))
-            .agg(sum(when(col("half") === "e", 1L).otherwise(0L))
-                .as("dce"),
-              sum(when(col("half") === "a", 1L).otherwise(0L)).as("dca"))
-          val (j, ks) = mergeOnKeys(state.get, part, Seq("grp", "x"))
-          val next = j.select(ks ++ Seq(
-            (coalesce(col("ce"), lit(0L)) + coalesce(col("dce"), lit(0L)))
-              .as("ce"),
-            (coalesce(col("ca"), lit(0L)) + coalesce(col("dca"), lit(0L)))
-              .as("ca")): _*)
-          sink(graft.ops.Analytics.cvmFromGrid(
-            state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    twoSampleSink(obsStream, grpCol, xCol, halfCol, checkpointDir, sink)(
+      graft.ops.Analytics.cvmFromGrid)
 
   /** q180's Kolmogorov–Smirnov two-sample drift maintained at INGEST —
     * the 25th sink: the MAX-ECDF-distance companion to
     * [[startCvmSink]]'s integrated distance, over the same
-    * (grp, value, half) observation stream and the SAME additive
-    * value-grid state shape ([[graft.ops.Analytics.ksFromGrid]]): each
-    * epoch's (D, scaled_d) is bit-identical to batch `ksDrift` over
-    * all arrived rows under any batch split (spec-pinned). KS reacts
-    * to the single worst point of divergence (a tail tear); CvM to
-    * accumulated shift — a live gate wants both tripwires on one
-    * state table. State persists per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): restarts
-    * RESUME, replayed epochs re-emit without re-merging. */
+    * (grp, value, half) observation stream and the SAME two-sample
+    * grid ([[graft.ops.Analytics.ksFromGrid]]): each epoch's
+    * (D, scaled_d) is bit-identical to batch `ksDrift` over all
+    * arrived rows under any batch split (spec-pinned). KS reacts to
+    * the single worst point of divergence (a tail tear); CvM to
+    * accumulated shift — a live gate wants both tripwires. */
   def startKsSink(obsStream: DataFrame, grpCol: String, xCol: String,
       halfCol: String, checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = obsStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("x",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("ce",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ca",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    obsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId))
-            sink(graft.ops.Analytics.ksFromGrid(state.get), epochId)
-        } else if (!batch.isEmpty) {
-          val part = batch.select(col(grpCol).cast("string").as("grp"),
-              col(xCol).cast("double").as("x"),
-              col(halfCol).cast("string").as("half"))
-            .groupBy(col("grp"), col("x"))
-            .agg(sum(when(col("half") === "e", 1L).otherwise(0L))
-                .as("dce"),
-              sum(when(col("half") === "a", 1L).otherwise(0L)).as("dca"))
-          val (j, ks) = mergeOnKeys(state.get, part, Seq("grp", "x"))
-          val next = j.select(ks ++ Seq(
-            (coalesce(col("ce"), lit(0L)) + coalesce(col("dce"), lit(0L)))
-              .as("ce"),
-            (coalesce(col("ca"), lit(0L)) + coalesce(col("dca"), lit(0L)))
-              .as("ca")): _*)
-          sink(graft.ops.Analytics.ksFromGrid(
-            state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    twoSampleSink(obsStream, grpCol, xCol, halfCol, checkpointDir, sink)(
+      graft.ops.Analytics.ksFromGrid)
 
   /** q284's Wasserstein-1 drift magnitude maintained at INGEST — the
     * 26th sink: where [[startKsSink]] answers "did the distribution
     * move" (max ECDF tear) and [[startCvmSink]] "did it drift overall"
     * (integrated squared distance), this one answers "HOW FAR did the
     * mass move, in the units of x" — the earth-mover magnitude a
-    * rollback decision actually wants. Same (grp, value, half)
-    * observation stream, same additive (grp, x, ce, ca) value-grid
-    * state as the KS/CvM sinks ([[graft.ops.Analytics
-    * .wassersteinFromGrid]]): each epoch's w1 is bit-identical to
-    * batch `wassersteinDrift` over all arrived rows under any batch
-    * split (spec-pinned). State persists per committed epoch under
-    * `checkpointDir/graft-monitor-state` ([[MonitorState]]): restarts
-    * RESUME, replayed epochs re-emit without re-merging. */
+    * rollback decision actually wants. Same observation stream, same
+    * two-sample grid ([[graft.ops.Analytics.wassersteinFromGrid]]):
+    * each epoch's w1 is bit-identical to batch `wassersteinDrift` over
+    * all arrived rows under any batch split (spec-pinned). */
   def startWassersteinSink(obsStream: DataFrame, grpCol: String,
       xCol: String, halfCol: String, checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val spark0 = obsStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("grp",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("x",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("ce",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ca",
-          org.apache.spark.sql.types.LongType))))
-    val state = new MonitorState(spark0,
-      checkpointDir + "/graft-monitor-state", empty)
-    obsStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.alreadyMerged(epochId)) {
-          if (state.isLast(epochId))
-            sink(graft.ops.Analytics.wassersteinFromGrid(state.get),
-              epochId)
-        } else if (!batch.isEmpty) {
-          val part = batch.select(col(grpCol).cast("string").as("grp"),
-              col(xCol).cast("double").as("x"),
-              col(halfCol).cast("string").as("half"))
-            .groupBy(col("grp"), col("x"))
-            .agg(sum(when(col("half") === "e", 1L).otherwise(0L))
-                .as("dce"),
-              sum(when(col("half") === "a", 1L).otherwise(0L)).as("dca"))
-          val (j, ks) = mergeOnKeys(state.get, part, Seq("grp", "x"))
-          val next = j.select(ks ++ Seq(
-            (coalesce(col("ce"), lit(0L)) + coalesce(col("dce"), lit(0L)))
-              .as("ce"),
-            (coalesce(col("ca"), lit(0L)) + coalesce(col("dca"), lit(0L)))
-              .as("ca")): _*)
-          sink(graft.ops.Analytics.wassersteinFromGrid(
-            state.commit(next, epochId)), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    twoSampleSink(obsStream, grpCol, xCol, halfCol, checkpointDir, sink)(
+      graft.ops.Analytics.wassersteinFromGrid)
 
   /** q170's fill-in-the-middle construction at INGEST time: like the
     * span-corruption sink, the construction is a pure per-document
@@ -1117,14 +591,8 @@ object StreamCuration {
   def startFimSink(docStream: DataFrame, idCol: String, textCol: String,
       spmPct: Int, checkpointDir: String,
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(graft.ops.Packing.fimSplit(batch, col(idCol), col(textCol),
-            spmPct), epochId)
-        }
-      }
-      .start()
+    Sinks.start(docStream, checkpointDir) { (batch, epochId) =>
+      sink(graft.ops.Packing.fimSplit(batch, col(idCol), col(textCol),
+        spmPct), epochId)
+    }
 }

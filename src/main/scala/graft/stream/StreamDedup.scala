@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming exact deduplication — the streaming-native form of
   * [[graft.ops.Dedup.exactDedup]] for at-least-once ingest (the
@@ -85,17 +85,11 @@ object StreamDedup {
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val state = new java.util.concurrent.atomic.AtomicReference[DataFrame](
       initialLabels.localCheckpoint(true))
-    edgeStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          val next = graft.ops.Graph.incrementalComponents(
-            state.get(), batch, srcCol, dstCol).localCheckpoint(true)
-          state.set(next)
-          sink(next, epochId)
-        }
-      }
-      .start()
+    Sinks.start(edgeStream, checkpointDir) { (batch, epochId) =>
+      val next = graft.ops.Graph.incrementalComponents(
+        state.get(), batch, srcCol, dstCol).localCheckpoint(true)
+      state.set(next)
+      sink(next, epochId)
+    }
   }
 }

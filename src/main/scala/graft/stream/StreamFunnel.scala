@@ -2,7 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming ordered-funnel maintenance — the online half of q216
   * ([[graft.ops.Analytics.funnel]]): per micro-batch, fold the new
@@ -69,9 +69,9 @@ object StreamFunnel {
           .filter(col("ts") > col("tp"))
           .select(col("u"), col("ts"))
       val fresh = cand.groupBy(col("u")).agg(min(col("ts")).as("t"))
-      // null-safe key merge (StreamCuration.mergeOnKeys): a NULL u
+      // null-safe key merge (Sinks.mergeOnKeys): a NULL u
       // must MERGE into one state row, not duplicate per epoch
-      val (j, ks) = StreamCuration.mergeOnKeys(fresh,
+      val (j, ks) = Sinks.mergeOnKeys(fresh,
         old.select(col("u"), col("t").as("told")), Seq("u"))
       val arr = j.select(ks :+
           least(coalesce(col("t"), col("told")),
@@ -115,23 +115,17 @@ object StreamFunnel {
     // state: (u, i, t) — min arrival per (unit, stage index)
     val state = new java.util.concurrent.atomic.AtomicReference[DataFrame](
       emptyState(spark0).localCheckpoint(true))
-    eventStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          val ev = batch.select(col(unitCol).cast("string").as("u"),
-            col(tsCol).cast("long").as("ts"), col(stageCol).as("st"))
-            .localCheckpoint(true) // one consumer per stage below
-          val arrivals = foldChain(ev, state.get(), stages)
-          val next = arrivals.zipWithIndex.map { case (a, i) =>
-            a.select(col("u"), lit(i).as("i"), col("t"))
-          }.reduce(_.unionByName(_)).localCheckpoint(true)
-          state.set(next)
-          sink(funnelCounts(arrivals, stages), epochId)
-        }
-      }
-      .start()
+    Sinks.start(eventStream, checkpointDir) { (batch, epochId) =>
+      val ev = batch.select(col(unitCol).cast("string").as("u"),
+        col(tsCol).cast("long").as("ts"), col(stageCol).as("st"))
+        .localCheckpoint(true) // one consumer per stage below
+      val arrivals = foldChain(ev, state.get(), stages)
+      val next = arrivals.zipWithIndex.map { case (a, i) =>
+        a.select(col("u"), lit(i).as("i"), col("t"))
+      }.reduce(_.unionByName(_)).localCheckpoint(true)
+      state.set(next)
+      sink(funnelCounts(arrivals, stages), epochId)
+    }
   }
 
   /** Event-time-watermark funnel: buffer events until
@@ -162,38 +156,32 @@ object StreamFunnel {
       (DataFrame, DataFrame, Long)](
       (emptyState(spark0).localCheckpoint(true),
         emptyBuf.localCheckpoint(true), Long.MinValue))
-    eventStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          val (finalArr, buffer, maxTs) = state.get()
-          // NULL timestamps are dropped AT INGEST, explicitly: without
-          // this filter they would vanish silently anyway (ts <= wm and
-          // ts > wm are both NULL → neither expired nor retained) —
-          // making the drop a documented contract instead of an
-          // accident, matching a batch funnel run on ts-non-null input
-          val ev = batch.select(col(unitCol).cast("string").as("u"),
-            col(tsCol).cast("long").as("ts"), col(stageCol).as("st"))
-            .filter(col("ts").isNotNull)
-          val pooled = buffer.unionByName(ev)
-            .localCheckpoint(true) // consumers: max, expired, kept
-          val batchMax = pooled.agg(max(col("ts"))).first()
-          val newMax = math.max(maxTs,
-            if (batchMax.isNullAt(0)) Long.MinValue else batchMax.getLong(0))
-          // saturating subtraction: Long.MinValue − delay must not wrap
-          val wm = if (newMax == Long.MinValue) Long.MinValue
-            else newMax - delay
-          val expired = pooled.filter(col("ts") <= wm)
-          val kept = pooled.filter(col("ts") > wm).localCheckpoint(true)
-          val arrivals = foldChain(expired, finalArr, stages)
-          val next = arrivals.zipWithIndex.map { case (a, i) =>
-            a.select(col("u"), lit(i).as("i"), col("t"))
-          }.reduce(_.unionByName(_)).localCheckpoint(true)
-          state.set((next, kept, newMax))
-          sink(funnelCounts(arrivals, stages), epochId)
-        }
-      }
-      .start()
+    Sinks.start(eventStream, checkpointDir) { (batch, epochId) =>
+      val (finalArr, buffer, maxTs) = state.get()
+      // NULL timestamps are dropped AT INGEST, explicitly: without
+      // this filter they would vanish silently anyway (ts <= wm and
+      // ts > wm are both NULL → neither expired nor retained) —
+      // making the drop a documented contract instead of an
+      // accident, matching a batch funnel run on ts-non-null input
+      val ev = batch.select(col(unitCol).cast("string").as("u"),
+        col(tsCol).cast("long").as("ts"), col(stageCol).as("st"))
+        .filter(col("ts").isNotNull)
+      val pooled = buffer.unionByName(ev)
+        .localCheckpoint(true) // consumers: max, expired, kept
+      val batchMax = pooled.agg(max(col("ts"))).first()
+      val newMax = math.max(maxTs,
+        if (batchMax.isNullAt(0)) Long.MinValue else batchMax.getLong(0))
+      // saturating subtraction: Long.MinValue − delay must not wrap
+      val wm = if (newMax == Long.MinValue) Long.MinValue
+        else newMax - delay
+      val expired = pooled.filter(col("ts") <= wm)
+      val kept = pooled.filter(col("ts") > wm).localCheckpoint(true)
+      val arrivals = foldChain(expired, finalArr, stages)
+      val next = arrivals.zipWithIndex.map { case (a, i) =>
+        a.select(col("u"), lit(i).as("i"), col("t"))
+      }.reduce(_.unionByName(_)).localCheckpoint(true)
+      state.set((next, kept, newMax))
+      sink(funnelCounts(arrivals, stages), epochId)
+    }
   }
 }

@@ -35,21 +35,16 @@ object StreamMv {
     * the CDC `feed` stream. Returns the query and a live view accessor.
     * `initial` must already be materialized (it is re-read per batch). */
   def start(feed: DataFrame, initial: DataFrame, grp: String, value: String,
-      checkpointDir: String, queryName: String)
-      : (StreamingQuery, () => DataFrame) = {
+      checkpointDir: String): (StreamingQuery, () => DataFrame) = {
     val state = new AtomicReference[DataFrame](initial)
-    val q = feed.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // delta-apply, then swap: lineage truncated per batch so the
-        // plan never deepens with stream history
-        val next = graft.ops.Merge
-          .incrementalAggApply(state.get(), batch, grp, value)
-          .localCheckpoint(true)
-        state.set(next)
-      }
-      .start()
+    val q = Sinks.start(feed, checkpointDir) { (batch, _) =>
+      // delta-apply, then swap: lineage truncated per batch so the
+      // plan never deepens with stream history
+      val next = graft.ops.Merge
+        .incrementalAggApply(state.get(), batch, grp, value)
+        .localCheckpoint(true)
+      state.set(next)
+    }
     (q, () => state.get())
   }
 }

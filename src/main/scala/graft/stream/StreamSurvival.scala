@@ -2,7 +2,8 @@ package graft.stream
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming Kaplan–Meier — the q254 curve maintained at ingest (the
   * 17th sink). The stream carries FINALIZED units (duration, event) —
@@ -16,113 +17,50 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * sized — one row per day of the observation window, not one per unit:
   * the tightest bounded-state shape any sink here achieves, and the
   * reason a 100 TB unit stream costs the same driver-side state as a
-  * 100-row one. Empty batches skip (the S7 guard); at-least-once
-  * replay of a batch is NOT idempotent for counts, so the checkpoint
-  * guarantees effectively-once delivery into foreachBatch (the ST4
-  * layering). */
+  * 100-row one. Empty batches skip (the S7 guard). At-least-once
+  * replay of a batch is NOT idempotent for counts, so the state goes
+  * through [[Sinks.additive]]: persisted per committed epoch, resumed
+  * on restart, and a replayed epoch is never merged twice. */
 object StreamSurvival {
 
   def startKmSink(unitStream: DataFrame, durationCol: String,
       eventCol: String, checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark0 = unitStream.sparkSession
-    val empty = spark0.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("t",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("d",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("leave",
-          org.apache.spark.sql.types.LongType))))
-    val state = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-      empty.localCheckpoint(true))
-    unitStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          val st = state.get()
-          val part = batch.select(
-              col(durationCol).cast("long").as("t"),
-              col(eventCol).cast("boolean").as("e"))
-            .groupBy(col("t"))
-            .agg(sum(when(col("e"), 1L).otherwise(0L)).as("d"),
-              count(lit(1)).as("leave"))
-          // null-safe key merge (StreamCuration.mergeOnKeys): a NULL t
-          // (uncastable duration) must MERGE, not duplicate per epoch
-          val (j, ks) = StreamCuration.mergeOnKeys(st, part, Seq("t"))
-          val next = j.select(ks ++ Seq(
-              (coalesce(st("d"), lit(0L)) +
-                coalesce(part("d"), lit(0L))).as("d"),
-              (coalesce(st("leave"), lit(0L)) +
-                coalesce(part("leave"), lit(0L))).as("leave")): _*)
-            .localCheckpoint(true) // consumers: next epoch + the curve
-          state.set(next)
-          sink(graft.ops.Survival.kaplanMeierFromCounts(next), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    Sinks.additive(unitStream, checkpointDir, Seq("t"),
+        StructType.fromDDL("t BIGINT, d BIGINT, leave BIGINT")) {
+      batch => batch.select(
+          col(durationCol).cast("long").as("t"),
+          col(eventCol).cast("boolean").as("e"))
+        .groupBy(col("t"))
+        .agg(sum(when(col("e"), 1L).otherwise(0L)).as("d"),
+          count(lit(1)).as("leave"))
+    }(graft.ops.Survival.kaplanMeierFromCounts, sink)
 
   /** Streaming Aalen–Johansen cumulative incidence — q261 maintained
     * at ingest (the 18th sink): the stream carries finalized units
-    * (duration, cause — NULL = censored); state is TWO exact long
-    * count tables, the all-cause per-step (t, d, leave) and the
-    * per-(t, cause) event counts — both additive across any batching,
-    * so each epoch's CIF curves are bit-identical to batch
-    * [[graft.ops.Survival.cumulativeIncidence]] over the union of all
-    * arrived units (SurvivalSpec pins shuffled-split equality). State
-    * is calendar-grid × causes — the q254-sink bounded-state shape
-    * with a |causes| factor. */
+    * (duration, cause — NULL = censored). State is ONE exact long
+    * count table (t, k, n) with k = NULL for censored units; both
+    * tables the curves need — the all-cause per-step (t, d, leave) and
+    * the per-(t, cause) event counts — derive from it at readout. It
+    * is additive across any batching, so each epoch's CIF curves are
+    * bit-identical to batch [[graft.ops.Survival.cumulativeIncidence]]
+    * over the union of all arrived units (SurvivalSpec pins
+    * shuffled-split equality). State is calendar-grid × causes — the
+    * q254-sink bounded-state shape with a |causes|+1 factor — and
+    * persists through [[Sinks.additive]] like the KM sink's. */
   def startCifSink(unitStream: DataFrame, durationCol: String,
       causeCol: String, checkpointDir: String,
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark0 = unitStream.sparkSession
-    def empty(fields: (String, org.apache.spark.sql.types.DataType)*) =
-      spark0.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
-          org.apache.spark.sql.types.StructField(n, t) }))
-    import org.apache.spark.sql.types.{LongType, StringType}
-    val state = new java.util.concurrent.atomic.AtomicReference[
-      (DataFrame, DataFrame)]((
-      empty("t" -> LongType, "d" -> LongType, "leave" -> LongType)
-        .localCheckpoint(true),
-      empty("t" -> LongType, "k" -> StringType, "dk" -> LongType)
-        .localCheckpoint(true)))
-    unitStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          val (perSt, dkSt) = state.get()
-          val u = batch.select(col(durationCol).cast("long").as("t"),
-              col(causeCol).cast("string").as("k"))
-            .localCheckpoint(true) // consumers: per-step + per-cause
-          val perB = u.groupBy(col("t"))
-            .agg(sum(when(col("k").isNotNull, 1L).otherwise(0L)).as("d"),
-              count(lit(1)).as("leave"))
-          val dkB = u.filter(col("k").isNotNull)
-            .groupBy(col("t"), col("k")).agg(count(lit(1)).as("dk"))
-          val (pj, pks) = StreamCuration.mergeOnKeys(perSt, perB, Seq("t"))
-          val perN = pj.select(pks ++ Seq(
-              (coalesce(perSt("d"), lit(0L)) +
-                coalesce(perB("d"), lit(0L))).as("d"),
-              (coalesce(perSt("leave"), lit(0L)) +
-                coalesce(perB("leave"), lit(0L))).as("leave")): _*)
-            .localCheckpoint(true)
-          val (dj, dks) = StreamCuration.mergeOnKeys(dkSt, dkB,
-            Seq("t", "k"))
-          val dkN = dj.select(dks :+
-              (coalesce(dkSt("dk"), lit(0L)) +
-                coalesce(dkB("dk"), lit(0L))).as("dk"): _*)
-            .localCheckpoint(true)
-          state.set((perN, dkN))
-          sink(graft.ops.Survival.cumulativeIncidenceFromCounts(
-            perN, dkN), epochId)
-        }
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    Sinks.additive(unitStream, checkpointDir, Seq("t", "k"),
+        StructType.fromDDL("t BIGINT, k STRING, n BIGINT")) {
+      batch => batch.select(col(durationCol).cast("long").as("t"),
+          col(causeCol).cast("string").as("k"))
+        .groupBy(col("t"), col("k")).agg(count(lit(1)).as("n"))
+    }(st => graft.ops.Survival.cumulativeIncidenceFromCounts(
+      st.groupBy(col("t"))
+        .agg(sum(when(col("k").isNotNull, col("n")).otherwise(0L))
+            .as("d"),
+          sum(col("n")).as("leave")),
+      st.filter(col("k").isNotNull)
+        .select(col("t"), col("k"), col("n").as("dk"))), sink)
 }

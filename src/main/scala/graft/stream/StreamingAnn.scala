@@ -1,7 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.Ann
 
 /** Streaming ANN serving over a static, pre-trained IVF·PQ index — the
@@ -31,16 +31,10 @@ object StreamingAnn {
       sink: (DataFrame, Long) => Unit,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : StreamingQuery =
-    queryStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(Ann.ivfPqSearch(index, batch, nprobe, k, idCol, vecCol),
-            epochId)
-        }
-      }
-      .start()
+    Sinks.start(queryStream, checkpointDir) { (batch, epochId) =>
+      sink(Ann.ivfPqSearch(index, batch, nprobe, k, idCol, vecCol),
+        epochId)
+    }
 
   /** Streaming INDEX maintenance — the [[Ann.ivfPqAppend]] contract on
     * a vector stream: each micro-batch of new corpus vectors is encoded
@@ -56,16 +50,10 @@ object StreamingAnn {
       checkpointDir: String, sink: (DataFrame, Long) => Unit,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : StreamingQuery =
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(Ann.ivfPqAppend(index.copy(codes = index.codes.limit(0)),
-            batch, idCol, vecCol).codes, epochId)
-        }
-      }
-      .start()
+    Sinks.start(vecStream, checkpointDir) { (batch, epochId) =>
+      sink(Ann.ivfPqAppend(index.copy(codes = index.codes.limit(0)),
+        batch, idCol, vecCol).codes, epochId)
+    }
 
   /** [[startIvfPqIndexSink]] for an OPQ index ([[Ann.opqIvfPqIndex]]):
     * each micro-batch permutes into the index's coordinate space
@@ -81,16 +69,10 @@ object StreamingAnn {
       sink: (DataFrame, Long) => Unit,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : StreamingQuery =
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(Ann.opqAppend(index.copy(codes = index.codes.limit(0)),
-            perm, batch, idCol, vecCol).codes, epochId)
-        }
-      }
-      .start()
+    Sinks.start(vecStream, checkpointDir) { (batch, epochId) =>
+      sink(Ann.opqAppend(index.copy(codes = index.codes.limit(0)),
+        perm, batch, idCol, vecCol).codes, epochId)
+    }
 
   /** Streaming ingest-time decontamination — [[Ann.semanticDecontam]]
     * on an arriving corpus-vector stream: each micro-batch is scored
@@ -106,14 +88,8 @@ object StreamingAnn {
       tau: Double, checkpointDir: String, sink: (DataFrame, Long) => Unit,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : StreamingQuery =
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          sink(Ann.semanticDecontam(batch, benchmark, tau, idCol, vecCol),
-            epochId)
-        }
-      }
-      .start()
+    Sinks.start(vecStream, checkpointDir) { (batch, epochId) =>
+      sink(Ann.semanticDecontam(batch, benchmark, tau, idCol, vecCol),
+        epochId)
+    }
 }

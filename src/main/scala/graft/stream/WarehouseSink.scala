@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.LoadCycle
 import graft.ops.LoadCycle.Warehouse
 
@@ -128,23 +128,17 @@ class WarehouseSink(spark: SparkSession, baseDir: String) {
       LoadCycle.emptyWarehouse(staged.sparkSession
         .createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           staged.schema)))
-    staged.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // data-derived cutoff: everything in this batch loads this cycle
-          val cutoff = batch.agg(max(col("ingest_time"))).first().getTimestamp(0)
-          // dims are multi-consumer within the cycle: persist for its
-          // duration, release once the version swap re-reads from parquet
-          val cached = scala.collection.mutable.Buffer.empty[DataFrame]
-          val next = LoadCycle.run(
-            current.get().copy(staging = batch), lit(cutoff),
-            materialize = { df => cached += df.persist(); df })
-          current.set(materialize(next)) // atomic version swap
-          cached.foreach(_.unpersist(blocking = false))
-        }
-      }
-      .start()
+    Sinks.start(staged, checkpointDir) { (batch, _) =>
+      // data-derived cutoff: everything in this batch loads this cycle
+      val cutoff = batch.agg(max(col("ingest_time"))).first().getTimestamp(0)
+      // dims are multi-consumer within the cycle: persist for its
+      // duration, release once the version swap re-reads from parquet
+      val cached = scala.collection.mutable.Buffer.empty[DataFrame]
+      val next = LoadCycle.run(
+        current.get().copy(staging = batch), lit(cutoff),
+        materialize = { df => cached += df.persist(); df })
+      current.set(materialize(next)) // atomic version swap
+      cached.foreach(_.unpersist(blocking = false))
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The durable-monitor-state contract (ADVICE r10): the cumulative
   * foreachBatch sinks must survive a query RESTART (offsets resume →
@@ -39,93 +41,182 @@ class MonitorStateSpec extends SparkSpec {
     assert(kept.sorted.toSeq == Seq("e=1", "e=2"), kept.mkString(","))
   }
 
-  test("startIsotonicSink: restart with the same checkpoint RESUMES the " +
-    "merged state — final readout ≡ batch over ALL arrived rows") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val all: Seq[(Double, Boolean)] =
-      Seq.fill(1)((0.1, true)) ++ Seq.fill(4)((0.1, false)) ++
-        Seq.fill(3)((0.35, true)) ++ Seq.fill(2)((0.35, false)) ++
-        Seq.fill(2)((0.6, true)) ++ Seq.fill(3)((0.6, false)) ++
-        Seq.fill(4)((0.85, true)) ++ Seq.fill(1)((0.85, false))
-    val ckpt = java.nio.file.Files.createTempDirectory("iso-restart")
-      .toString
-    val out = scala.collection.mutable.Map[Long, Seq[String]]()
-    def sinkFn(df: org.apache.spark.sql.DataFrame, epoch: Long): Unit =
-      out.synchronized {
-        out(epoch) = df.orderBy(col("bin")).collect()
-          .map(_.toString).toSeq
-      }
-    // run 1: two batches, then stop — offsets AND state are committed
-    val ms1 = MemoryStream[(Double, Boolean)]
-    val q1 = graft.stream.StreamCuration.startIsotonicSink(
-      ms1.toDF().toDF("conf", "ok"), "conf", "ok", 4, ckpt, sinkFn)
-    try {
-      ms1.addData(all.take(7)); q1.processAllAvailable()
-      ms1.addData(all.slice(7, 14)); q1.processAllAvailable()
-    } finally q1.stop()
-    // run 2: a brand-new QUERY (fresh sink call → fresh in-memory
-    // reference — exactly the reset scenario under test) over the SAME
-    // source and the SAME checkpoint dir: offsets resume past run-1
-    // data, so only a durable state reload can see the first 14 rows
-    val q2 = graft.stream.StreamCuration.startIsotonicSink(
-      ms1.toDF().toDF("conf", "ok"), "conf", "ok", 4, ckpt, sinkFn)
-    val epochsBefore = out.synchronized(out.keys.toSet)
-    try { ms1.addData(all.drop(14)); q2.processAllAvailable() }
-    finally q2.stop()
-    val finalEpoch = out.synchronized(
-      (out.keys.toSet -- epochsBefore)).max
-    val got = out.synchronized(out(finalEpoch))
-    val want = ops.Quality.isotonicCalibration(
-      spark.createDataFrame(all).toDF("conf", "ok"),
-      col("conf"), col("ok"), 4)
-      .orderBy(col("bin")).collect().map(_.toString).toSeq
-    assert(got == want, s"restart lost state:\n$got\nvs\n$want")
+  /** One sink on [[graft.stream.Sinks.additive]], fed comma-separated
+    * `rows` through a MemoryStream: `start` projects the stream's
+    * `value` column into the columns its sink reads. */
+  private case class AdditiveCase(name: String, rows: Seq[String],
+      start: (DataFrame, String, (DataFrame, Long) => Unit) =>
+        StreamingQuery)
+
+  /** Comma-separated fields of `value` as string columns; an empty
+    * field is NULL. */
+  private def fields(raw: DataFrame, names: String*): DataFrame = {
+    val parts = split(col("value"), ",")
+    raw.select(names.zipWithIndex.map { case (n, i) =>
+      when(parts.getItem(i) =!= "", parts.getItem(i)).as(n) }: _*)
   }
 
-  test("startBenfordSink: replayed epoch is merged exactly once " +
-    "(at-least-once foreachBatch → effectively-once state)") {
+  private lazy val additiveCases: Seq[AdditiveCase] = {
+    import graft.stream.{StreamCuration => C, StreamSurvival => S}
+    import spark.implicits._
+    val periods = Seq(1, 1, 2, 3, 3, 3, 4, 5, 5, 6, 6, 6, 6).map(_.toString)
+    val twoSample = (1 to 6).map(i => s"g,${i % 4}.0,e") ++
+      (1 to 6).map(i => s"g,${i % 4 + 2}.0,a")
+    val media = (1L to 12L).map(i => (i, s"media_payload_$i"))
+      .toDF("media_id", "payload")
+    val rnd = new scala.util.Random(43)
+    def vec() = Seq.fill(4)(math.rint(rnd.nextGaussian() * 1000) / 1000)
+    val index = (1L to 10L).map(i => (i, vec())).toDF("vec_id", "embedding")
+    val queries = (101 to 109).map(i => s"$i,${vec().mkString(";")}")
+    Seq(
+      AdditiveCase("changepoint", periods, (raw, ck, sink) =>
+        C.startChangepointSink(fields(raw, "p"), "p", ck, sink)),
+      AdditiveCase("trend", periods, (raw, ck, sink) =>
+        C.startTrendSink(fields(raw, "p"), "p", ck, sink)),
+      AdditiveCase("pettitt", periods, (raw, ck, sink) =>
+        C.startPettittSink(fields(raw, "p"), "p", ck, sink)),
+      AdditiveCase("cuped", Seq("u1,2024-01-01 00:00:00,1.5",
+          "u1,2024-01-03 00:00:00,2.25", "u2,2024-01-01 00:00:00,0.5",
+          "u2,2024-01-04 00:00:00,3.0", "u3,2024-01-03 00:00:00,1.0",
+          "u4,2024-01-01 00:00:00,2.0", "u4,2024-01-05 00:00:00,4.5",
+          "u5,2024-01-01 00:00:00,0.75", "u5,2024-01-06 00:00:00,1.25"),
+        (raw, ck, sink) => C.startCupedSink(fields(raw, "u", "ts", "v"),
+          "u", "ts", "v", "2024-01-02 00:00:00", ck, sink)),
+      AdditiveCase("isotonic", Seq("0.1,true", "0.1,false", "0.1,false",
+          "0.35,true", "0.35,true", "0.35,false", "0.6,true", "0.6,false",
+          "0.85,true", "0.85,true", "0.85,false", "0.95,true"),
+        (raw, ck, sink) => C.startIsotonicSink(fields(raw, "conf", "ok"),
+          "conf", "ok", 4, ck, sink)),
+      AdditiveCase("delong", Seq("0.2,false", "0.8,true", "0.4,false",
+          "0.7,true", "0.5,true", "0.5,false", "0.9,true", "0.1,false",
+          "0.6,false"),
+        (raw, ck, sink) => C.startDelongSink(fields(raw, "s", "y"),
+          "s", "y", ck, sink)),
+      AdditiveCase("benford", Seq("1.23", "1.9", "2.5", "3.1", "9.9",
+          "1.1", "4.2", "8.8", "12.5", "0.001"),
+        (raw, ck, sink) => C.startBenfordSink(fields(raw, "v"), "v", ck,
+          sink)),
+      AdditiveCase("qini", Seq("true,10.0,true", "true,10.0,true",
+          "false,10.0,false", "false,10.0,true", "true,1.0,false",
+          "true,1.0,true", "false,1.0,false", "false,1.0,false",
+          "true,6.0,true"),
+        (raw, ck, sink) => C.startQiniSink(fields(raw, "t", "s", "y"),
+          "t", "s", "y", 10.0, 2, ck, sink)),
+      AdditiveCase("crossModalRecall",
+        (1 to 12 by 2).map(i => s"$i,media_payload_$i"),
+        (raw, ck, sink) => C.startCrossModalRecallSink(
+          fields(raw, "doc_id", "payload"), "doc_id", "payload", media,
+          "media_id", "payload", Seq(1, 5), ck, sink)),
+      AdditiveCase("mmrDiversity", queries, (raw, ck, sink) =>
+        C.startMmrDiversitySink(fields(raw, "vec_id", "v")
+            .select(col("vec_id"),
+              split(col("v"), ";").cast("array<double>").as("embedding")),
+          "vec_id", "embedding", index, "vec_id", "embedding", 5, 3, 0.7,
+          ck, sink)),
+      AdditiveCase("privacy", Seq("X,1", "Y,2", "W,0", "W,1", "X,1",
+          "W,2", ",0", "Y,2", ",2", "W,0"),
+        (raw, ck, sink) => C.startPrivacySink(fields(raw, "g", "s"),
+          Seq("g"), "s", 2L, 1.5, 0.5, ck, sink)),
+      AdditiveCase("cvm", twoSample, (raw, ck, sink) =>
+        C.startCvmSink(fields(raw, "grp", "x", "half"), "grp", "x", "half",
+          ck, sink)),
+      AdditiveCase("ks", twoSample, (raw, ck, sink) =>
+        C.startKsSink(fields(raw, "grp", "x", "half"), "grp", "x", "half",
+          ck, sink)),
+      AdditiveCase("wasserstein", twoSample, (raw, ck, sink) =>
+        C.startWassersteinSink(fields(raw, "grp", "x", "half"), "grp",
+          "x", "half", ck, sink)),
+      AdditiveCase("kaplanMeier", Seq("1,true", "1,true", "2,false",
+          "3,true", "4,false", "3,true", "7,true", "5,false", "2,true"),
+        (raw, ck, sink) => S.startKmSink(fields(raw, "dur", "ev"), "dur",
+          "ev", ck, sink)),
+      AdditiveCase("cumulativeIncidence", Seq("1,x", "2,y", "3,", "4,x",
+          "2,x", "5,", "1,y", "7,x", "3,y"),
+        (raw, ck, sink) => S.startCifSink(fields(raw, "dur", "cause"),
+          "dur", "cause", ck, sink)))
+  }
+
+  private type Emissions =
+    scala.collection.mutable.ArrayBuffer[(Long, Seq[String])]
+
+  /** Starts `c` over `ms` and `ckpt`, lets it finish any epoch the
+    * checkpoint left uncommitted, then feeds `batches` one trigger
+    * each; every emission is appended to `out` in order. */
+  private def feed(c: AdditiveCase, ms: MemoryStream[String], ckpt: String,
+      out: Emissions, batches: Seq[Seq[String]]): Unit = {
+    val q = c.start(ms.toDF(), ckpt, (df, epoch) => out.synchronized {
+      out += ((epoch, df.collect().map(_.toString).sorted.toSeq))
+    })
+    try {
+      q.processAllAvailable()
+      batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+    } finally q.stop()
+  }
+
+  private def thirds(rows: Seq[String]): Seq[Seq[String]] = {
+    val n = rows.size
+    Seq(rows.take(n / 3), rows.slice(n / 3, 2 * n / 3), rows.drop(2 * n / 3))
+  }
+
+  /** Each case's readout after all its rows arrive in ONE epoch. */
+  private lazy val oneEpochReadout: Map[String, Seq[String]] = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val vals = Seq(1.23, 1.9, 2.5, 3.1, 9.9, 1.1, 4.2, 8.8)
-    val ckpt = java.nio.file.Files.createTempDirectory("benford-replay")
-      .toString
-    val out = scala.collection.mutable.ArrayBuffer[(Long, String)]()
-    val ms = MemoryStream[Double]
-    val q = graft.stream.StreamCuration.startBenfordSink(
-      ms.toDF().toDF("v"), "v", ckpt,
-      (df, epoch) => out.synchronized {
-        out += ((epoch,
-          df.orderBy(col("digit")).collect().map(_.toString).mkString("|")))
-      })
-    try { ms.addData(vals); q.processAllAvailable() }
-    finally q.stop()
-    val afterFirst = out.synchronized(out.toVector)
-    assert(afterFirst.nonEmpty)
-    // simulate the at-least-once replay of the LAST epoch directly
-    // against the durable state: a fresh handle over the same dir must
-    // refuse the merge and the re-emitted readout must be unchanged
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("d",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o",
-          org.apache.spark.sql.types.LongType))))
-    val st = new graft.stream.MonitorState(spark,
-      ckpt + "/graft-monitor-state", empty)
-    val lastEpoch = afterFirst.map(_._1).max
-    assert(st.alreadyMerged(lastEpoch),
-      "replayed epoch must be recognized as merged")
-    val reEmit = ops.Quality.benfordFromDigits(st.get)
-      .orderBy(col("digit")).collect().map(_.toString).mkString("|")
-    assert(reEmit == afterFirst.last._2,
-      "re-emitted readout must equal the original epoch's")
-    // and the state total equals the arrived row count: merged ONCE
-    val totalObs = st.get.agg(sum(col("o"))).collect()(0).getLong(0)
-    assert(totalObs == vals.size.toLong,
-      s"state double-merged: $totalObs != ${vals.size}")
+    additiveCases.map { c =>
+      val out: Emissions = scala.collection.mutable.ArrayBuffer()
+      feed(c, MemoryStream[String], tmpDir(s"${c.name}-one"), out,
+        Seq(c.rows))
+      c.name -> out.last._2
+    }.toMap
   }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("additive sinks: a restart resumes the committed state") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val failed = additiveCases.flatMap { c =>
+      val ms = MemoryStream[String]
+      val ckpt = tmpDir(s"${c.name}-restart")
+      val out: Emissions = scala.collection.mutable.ArrayBuffer()
+      val Seq(b1, b2, b3) = thirds(c.rows)
+      feed(c, ms, ckpt, out, Seq(b1, b2))
+      // a brand-new query (fresh sink call, fresh in-memory state) over
+      // the same source and checkpoint: offsets resume past b1 and b2,
+      // so only a durable state reload still counts them
+      feed(c, ms, ckpt, out, Seq(b3))
+      val want = oneEpochReadout(c.name)
+      if (out.last._2 == want) None
+      else Some(s"${c.name}: ${out.last._2} vs $want")
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("additive sinks: a replayed epoch merges once and re-emits") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val failed = additiveCases.flatMap { c =>
+      val ms = MemoryStream[String]
+      val ckpt = tmpDir(s"${c.name}-replay")
+      val out: Emissions = scala.collection.mutable.ArrayBuffer()
+      val Seq(b1, b2, b3) = thirds(c.rows)
+      feed(c, ms, ckpt, out, Seq(b1, b2))
+      val last = out.last
+      // the state committed epoch `last`, the stream did not: the
+      // restarted query runs that epoch again (at-least-once)
+      dropLastCommit(ckpt)
+      val before = out.size
+      feed(c, ms, ckpt, out, Seq(b3))
+      val want = oneEpochReadout(c.name)
+      val replayed = out.lift(before)
+      if (replayed.contains(last) && out.last._2 == want) None
+      else Some(s"${c.name}: replay $replayed vs $last; final " +
+        s"${out.last._2} vs $want")
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
   test("startCvmSink (23rd sink): each emission ≡ batch cvmDrift over " +
     "all arrived rows under shuffled batch splits; restart resumes") {
     implicit val sqlCtx = spark.sqlContext

@@ -27,4 +27,13 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"NUL byte found in: ${offenders.mkString(", ")} — git will treat " +
         "these as binary and hide their diffs from review")
   }
+
+  test("stream sinks start in one place: .writeStream only in Sinks.scala") {
+    val starters = scalaSources("src/main")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
+        .contains(".writeStream"))
+      .map(_.getFileName.toString)
+    assert(starters == Seq("Sinks.scala"),
+      s".writeStream outside graft.stream.Sinks: ${starters.mkString(", ")}")
+  }
 }

@@ -14,4 +14,14 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.ansi.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
+
+  /** Deletes the newest batch's commit marker under a stream
+    * checkpoint, so the next query over that checkpoint runs the batch
+    * again with the same epoch id — a foreachBatch replay on demand. */
+  protected def dropLastCommit(checkpointDir: String): Unit = {
+    val commits = new java.io.File(checkpointDir, "commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Seq(s"$last", s".$last.crc").foreach(n =>
+      new java.io.File(commits, n).delete())
+  }
 }

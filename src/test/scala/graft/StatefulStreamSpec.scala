@@ -259,7 +259,7 @@ class StatefulStreamSpec extends SparkSpec {
       .toDF("grp", "n", "sum_v").localCheckpoint(true)
     val dir = java.nio.file.Files.createTempDirectory("mv").toString
     val (q, view) = graft.stream.StreamMv.start(
-      ms.toDF(), initial, "grp", "value", dir, "mv_q")
+      ms.toDF(), initial, "grp", "value", dir)
     def snapshot() = view().as[(String, Long, java.math.BigDecimal)]
       .collect().map(r => r._1 -> ((r._2, r._3.setScale(4)))).toMap
 
