@@ -4,16 +4,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT + codegen + parquet-footer caches, standard
     // steady-state benchmarking practice
@@ -23,7 +15,7 @@ object Bench {
     // of q28/q46 runs first measures work, not one-time JIT
     try {
       val tiny = spark.read.format("flight_events")
-        .option("rows", 2000L).option("partitions", cpus.toInt).load()
+        .option("rows", 2000L).option("partitions", cpus).load()
       graft.stream.FlightStream.pipeline(tiny.select(org.apache.spark.sql
           .functions.col("json")),
         org.apache.spark.sql.functions.lit(1700000000L + 1999L * 60L)
@@ -58,13 +50,8 @@ object Bench {
     // `jobsFlag` are named in the parsed line the way `bimodal` is.
     val jobsFlag =
       sys.env.getOrElse("SPARK_GRAFT_JOBS_FLAG", "25").toInt
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCounter.incrementAndGet()
-      })
+    val listener = new RunListener
+    spark.sparkContext.addSparkListener(listener)
 
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Int) = {
@@ -72,10 +59,10 @@ object Bench {
       // persist() (q22/q46) would otherwise cache-hit the previous
       // run and the min would time a cache read, not the query
       spark.catalog.clearCache()
-      jobCounter.set(0)
+      listener.reset()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count()
-        ((System.nanoTime() - t0) / 1e9, jobCounter.get()) }
+        ((System.nanoTime() - t0) / 1e9, listener.jobs.size) }
       catch { case _: Throwable => (-1.0, 0) }
     }
     // two fastest samples within 25% of each other = a stable minimum

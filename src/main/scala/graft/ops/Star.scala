@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Star-schema composition: dim lookups with alternate keys, the 4-way
@@ -9,9 +9,6 @@ import org.apache.spark.sql.functions._
   * /root/reference/db/01_views.sql:44-83)
   */
 object Star {
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 
   /** J2: disjunctive (OR-condition) left-join lookup, rewritten as two
     * equi left-joins + coalesce. The reference's

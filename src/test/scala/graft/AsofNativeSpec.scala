@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{AsofJoin, AsofJoinNative}
 
@@ -10,23 +9,9 @@ import graft.ops.{AsofJoin, AsofJoinNative}
   */
 class AsofNativeSpec extends SparkSpec {
 
-  private lazy val sessionWithStrategy: SparkSession = {
-    spark.sparkContext // ensure shared context
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    try org.apache.spark.sql.classic.SparkSession.builder()
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    finally prev.foreach { p =>
-      SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p)
-    }
-  }
+  import spark.implicits._
 
   test("native asofJoin ≡ composed form on random keyed data; plan is AsofJoinExec") {
-    val s = sessionWithStrategy
-    import s.implicits._
     val rnd = new scala.util.Random(42)
     val lRows = Seq.fill(400)((s"u${rnd.nextInt(9)}", rnd.nextInt(60).toLong, rnd.nextInt(100)))
     val rRows = Seq.fill(200)((s"u${rnd.nextInt(9)}", rnd.nextInt(60).toLong, rnd.nextInt(100)))
@@ -53,8 +38,6 @@ class AsofNativeSpec extends SparkSpec {
   }
 
   test("native asofJoin self-join (shared lineage) binds right columns correctly") {
-    val s = sessionWithStrategy
-    import s.implicits._
     // both sides slice the SAME DataFrame — without re-aliasing, left and
     // right would share exprIds and right refs would bind to left columns
     val ev = Seq(("a", 1L, 10), ("a", 2L, 20), ("a", 3L, 30), ("a", 4L, 40))
@@ -71,8 +54,6 @@ class AsofNativeSpec extends SparkSpec {
   }
 
   test("native asofJoin: null right timestamps are skipped, not match-blocking") {
-    val s = sessionWithStrategy
-    import s.implicits._
     // the null-ts row sorts NULLS FIRST; the valid ts=3 row behind it
     // must still be found
     val left = Seq(("a", 5L, 1)).toDF("k", "ts", "lv")
@@ -84,8 +65,6 @@ class AsofNativeSpec extends SparkSpec {
   }
 
   test("native asofJoin: empty right side → all-NULL right columns") {
-    val s = sessionWithStrategy
-    import s.implicits._
     val left = Seq(("a", 1L, 10)).toDF("k", "ts", "lv")
     val right = Seq.empty[(String, Long, Int)].toDF("k", "ts", "rv")
     val out = AsofJoinNative.asofJoin(left, right, Seq("k"), "ts").collect()

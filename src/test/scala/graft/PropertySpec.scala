@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import graft.expr.Timestamps
@@ -125,59 +124,28 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_normalize_ts is SQL-callable via GraftExtensions") {
-    // force a NEW session so the extension actually registers (getOrCreate
-    // would silently return the suite session); same SparkContext under it
-    spark.sparkContext // materialize the shared context first
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    try {
-      // withExtensions (not the spark.sql.extensions conf): the static
-      // conf is read from the already-running SparkContext and would be
-      // ignored here; on a fresh cluster session either route works.
-      val s2 = org.apache.spark.sql.classic.SparkSession.builder()
-        .withExtensions(new GraftExtensions()(_))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      val r = s2.sql(
-        "SELECT graft_normalize_ts('2024-05-01T10:20:30Z') AS ts").collect()
-      assert(r.head.getTimestamp(0).toInstant ==
-        java.time.Instant.parse("2024-05-01T10:20:30Z"))
-    } finally {
-      prev.foreach { p =>
-        SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p)
-      }
-    }
+    val r = spark.sql(
+      "SELECT graft_normalize_ts('2024-05-01T10:20:30Z') AS ts").collect()
+    assert(r.head.getTimestamp(0).toInstant ==
+      java.time.Instant.parse("2024-05-01T10:20:30Z"))
   }
 
   test("composed SQL functions (rolling hash, quality, PII) via GraftExtensions") {
-    spark.sparkContext
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    try {
-      val s2 = org.apache.spark.sql.classic.SparkSession.builder()
-        .withExtensions(new GraftExtensions()(_))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      val r = s2.sql(
-        "SELECT graft_rolling_hash('abc') AS h, " +
-          "graft_pii_scrub('mail a@b.io now') AS s, " +
-          "graft_pii_count('mail a@b.io now') AS n, " +
-          "graft_lang_id('the cat is on the mat') AS lang").collect().head
-      // zorder: interleave(x=0b11, y=0b01) = x bits at even, y at odd
-      val z = s2.sql("SELECT graft_zorder(3, 1) AS z").collect().head.getLong(0)
-      assert(z == 7L, s"zorder(3,1) = $z") // 0b0111
-      // same value as the Column-API definition on the suite session
-      import org.apache.spark.sql.functions.lit
-      val expectH = spark.range(1)
-        .select(graft.expr.TextStats.rollingHash(lit("abc"))).collect()(0).getLong(0)
-      assert(r.getLong(0) == expectH)
-      assert(r.getString(1) == "mail [EMAIL] now" && r.getLong(2) == 1L)
-      assert(r.getString(3) == "en")
-    } finally {
-      prev.foreach { p =>
-        SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p)
-      }
-    }
+    val r = spark.sql(
+      "SELECT graft_rolling_hash('abc') AS h, " +
+        "graft_pii_scrub('mail a@b.io now') AS s, " +
+        "graft_pii_count('mail a@b.io now') AS n, " +
+        "graft_lang_id('the cat is on the mat') AS lang").collect().head
+    // zorder: interleave(x=0b11, y=0b01) = x bits at even, y at odd
+    val z = spark.sql("SELECT graft_zorder(3, 1) AS z").collect().head.getLong(0)
+    assert(z == 7L, s"zorder(3,1) = $z") // 0b0111
+    // same value as the Column-API definition
+    import org.apache.spark.sql.functions.lit
+    val expectH = spark.range(1)
+      .select(graft.expr.TextStats.rollingHash(lit("abc"))).collect()(0).getLong(0)
+    assert(r.getLong(0) == expectH)
+    assert(r.getString(1) == "mail [EMAIL] now" && r.getLong(2) == 1L)
+    assert(r.getString(3) == "en")
   }
 
   test("native ShingleGen ≡ explode(shingles(text, n)) row-for-row") {

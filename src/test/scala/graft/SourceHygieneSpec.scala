@@ -36,4 +36,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(starters == Seq("Sinks.scala"),
       s".writeStream outside graft.stream.Sinks: ${starters.mkString(", ")}")
   }
+
+  test("sessions open in one place: SparkSession.builder only in GraftSession.scala") {
+    // this gate names the call itself, so it skips its own file
+    val builders = (scalaSources("src/main") ++ scalaSources("src/test"))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
+        .contains("SparkSession.builder"))
+      .map(_.getFileName.toString)
+      .filterNot(_ == "SourceHygieneSpec.scala")
+    assert(builders == Seq("GraftSession.scala"),
+      s"SparkSession.builder outside graft.GraftSession: ${builders.mkString(", ")}")
+  }
 }

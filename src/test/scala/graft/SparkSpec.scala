@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite, reference semantics
-  * (UTC, non-ANSI NULL-on-parse). */
+/** Shared local session for specs: the bench's session (extensions,
+  * UTC, non-ANSI) on 4 cores. Fixed at 4, not `SPARK_GRAFT_CPUS`, so plan
+  * contracts and partition counts do not depend on the host. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(4)
 
   /** Deletes the newest batch's commit marker under a stream
     * checkpoint, so the next query over that checkpoint runs the batch
