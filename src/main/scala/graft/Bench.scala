@@ -45,41 +45,38 @@ object Bench {
     // greedy loop, the k-fold serve shelf), where wall ≈ jobs × per-job
     // scheduler latency — ~100 ms+/job on a real cluster, so a 40-job
     // query costs 4+ s there regardless of data volume. Per query the
-    // record keeps the MIN jobs over clean samples (first samples may
-    // carry one-time shared-artifact builds); queries above
+    // record keeps the MIN jobs over clean samples; queries above
     // `jobsFlag` are named in the parsed line the way `bimodal` is.
     val jobsFlag =
       sys.env.getOrElse("SPARK_GRAFT_JOBS_FLAG", "25").toInt
     val listener = new RunListener
     spark.sparkContext.addSparkListener(listener)
 
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Int) = {
-      // drop persisted intermediates between runs: queries that
-      // persist() (q22/q46) would otherwise cache-hit the previous
-      // run and the min would time a cache read, not the query
-      spark.catalog.clearCache()
-      listener.reset()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count()
-        ((System.nanoTime() - t0) / 1e9, listener.jobs.size) }
-      catch { case _: Throwable => (-1.0, 0) }
-    }
     // two fastest samples within 25% of each other = a stable minimum
     def converged(ts: Seq[Double]): Boolean = ts.size >= 2 && {
       val s = ts.sorted; s(1) <= s(0) * 1.25
     }
 
-    // per-query MIN job count over clean samples (first samples carry
-    // one-time shared-artifact builds — the min is the steady state)
+    // per-query MIN job count over clean samples
     val jobsRec = scala.collection.mutable.Map[String, Int]()
     def timed(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
-      val (t, j) = timeOnce(fn)
-      if (t >= 0) jobsRec.updateWith(name)(o =>
-        Some(o.fold(j)(math.min(_, j))))
-      t
+      // drop persisted intermediates between runs: queries that
+      // persist() (q46) would otherwise cache-hit the previous run and
+      // the min would time a cache read, not the query; and drop the
+      // artifacts this query owns, so each sample builds them (a reader
+      // that runs before an artifact's owner builds it once)
+      spark.catalog.clearCache()
+      Artifacts.dropOwnedBy(name)
+      listener.reset()
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).count()
+        val (t, j) = ((System.nanoTime() - t0) / 1e9, listener.jobs.size)
+        jobsRec.updateWith(name)(o => Some(o.fold(j)(math.min(_, j))))
+        t
+      } catch { case _: Throwable => -1.0 }
     }
 
     val bench = SparkEntry.queries

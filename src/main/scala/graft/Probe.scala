@@ -5,12 +5,13 @@ import org.apache.spark.sql.execution.FormattedMode
 
 /** The diagnostic entry point: where a registered query's time went and
   * which plan it ran, on the session `Bench` times with. Each run starts
-  * from an empty cache, like a bench sample, and prints its wall, its job
-  * count and its top stages by executor time (tasks, ms, records in/out;
-  * a `1 tasks ... out=10.9M` stage is the lost-width signature). The last
-  * run also prints its job list, the static `explain(formatted)` plan and
-  * the final adaptive plan (`isFinalPlan=true`: runtime coalescing and
-  * join flips show there).
+  * from an empty cache and without the artifacts the query owns, like a
+  * bench sample, and prints its wall, its job count and its top stages
+  * by executor time (tasks, ms, records in/out; a `1 tasks ...
+  * out=10.9M` stage is the lost-width signature). The last run also
+  * prints its job list, the static `explain(formatted)` plan and the
+  * final adaptive plan (`isFinalPlan=true`: runtime coalescing and join
+  * flips show there).
   *
   * Usage: `SPARK_GRAFT_SF_DIR=<dir> sbt "runMain graft.Probe q1 q2 ..."`,
   * with `SPARK_GRAFT_PROBE_REPS` runs per query (default 6) on
@@ -43,6 +44,7 @@ object Probe {
     spark.sparkContext.addSparkListener(listener)
     try (1 to reps).toVector.map { i =>
       spark.catalog.clearCache()
+      Artifacts.dropOwnedBy(query)
       listener.reset()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)

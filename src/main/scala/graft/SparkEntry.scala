@@ -285,13 +285,11 @@ object SparkEntry {
     * re-running the signature scan + band self-join. `localCheckpoint`
     * (not `persist`): the table is pair-sized (LSH-selective), survives
     * `spark.catalog.clearCache()`, and cuts the plan so consumers'
-    * contracts stay candidate-shaped. First consumer in a session pays
-    * the build; q21 itself still constructs the full DAG (it IS the
-    * build operator, and its plan contract covers the mining shape). */
-  private val candMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def sharedLshCandidates(s: SparkSession, dir: String): DataFrame =
-    candMemo.getOrElseUpdate((s, dir),
+    * contracts stay candidate-shaped. Its owner q22 pays the build
+    * ([[Artifacts]]); q21 itself still constructs the full DAG (it IS
+    * the build operator, and its plan contract covers the mining shape). */
+  private val sharedLshCandidates =
+    Artifacts.declare("lsh_candidates", "q22_ngram_jaccard")((s, dir) =>
       qMinhashLsh(s, dir).localCheckpoint(true))
 
   /** Session-scoped MATERIALIZED verified-pair table (the q22 output —
@@ -299,17 +297,22 @@ object SparkEntry {
     * the dedup pipeline. q22 serves it; q139's chain audit consumes it
     * twice (CC fixpoint + rollup) without re-running the shingle
     * explode + intersection verify. Same artifact story as
-    * [[sharedLshCandidates]] — verify once per corpus, audit many. */
-  private val jacMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def sharedVerifiedJaccard(s: SparkSession, dir: String): DataFrame =
-    jacMemo.getOrElseUpdate((s, dir),
-      ngramJaccardBuild(s, dir).localCheckpoint(true))
+    * [[sharedLshCandidates]] — verify once per corpus, audit many.
+    * The exploded shingle set (which only the Jaccard stage needs —
+    * sizes + intersection = two consumers) is persisted once.
+    * minhashSignatures-composed parity with this oracle is covered by
+    * PropertySpec's ≡ test. */
+  private val sharedVerifiedJaccard =
+    Artifacts.declare("verified_jaccard", "q22_ngram_jaccard") { (s, dir) =>
+      val cands = sharedLshCandidates(s, dir)
+      TextDedup.jaccard(cands, candidateShingles(s, dir, cands))
+        .localCheckpoint(true)
+    }
 
   /** Session-scoped ANN artifacts — the retrieval-side analog of the
     * dedup artifact pair above. Production serves MANY query batches
     * and MANY evals against ONE trained index and ONE frozen eval
-    * baseline; these memos are that shape in-session:
+    * baseline; these artifacts are that shape in-session:
     *
     *  - [[sharedExactTopK]]: the exact brute-force ranking (the q25
     *    contract: 6-dp cosine, id tie-break). q25 serves it; q138's
@@ -324,59 +327,39 @@ object SparkEntry {
     *    q147 uses it as the "retrained" variant (its base ∪ batch IS
     *    this corpus).
     *
-    * First consumer in a session pays each build; the trainers' own
+    * Each owner query pays its build ([[Artifacts]]); the trainers' own
     * plan shapes stay covered by q142/q147 (which still construct the
     * raw-variant and appended-variant training DAGs in full). */
-  private val exactMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def sharedExactTopK(s: SparkSession, dir: String): DataFrame =
-    exactMemo.getOrElseUpdate((s, dir), {
+  private val sharedExactTopK =
+    Artifacts.declare("exact_topk", "q25_ann_cosine") { (s, dir) =>
       val emb = t(s, dir, "embeddings")
       Ann.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), 10)
         .localCheckpoint(true)
-    })
+    }
 
-  private val coarseMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Long, Seq[Double])]]
-  private def sharedCoarse(s: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    coarseMemo.getOrElseUpdate((s, dir),
+  private val sharedCoarse =
+    Artifacts.declare("coarse_quantizer", "q85_ivf_trained")((s, dir) =>
       Ann.kmeansCentroids(t(s, dir, "embeddings"), 4, 2))
 
-  private val ivfPqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Ann.IvfPqIndex]
-  private def sharedIvfPqIndex(s: SparkSession, dir: String): Ann.IvfPqIndex =
-    ivfPqMemo.getOrElseUpdate((s, dir), {
+  private val sharedIvfPqIndex =
+    Artifacts.declare("ivf_pq_index", "q135_ivf_pq") { (s, dir) =>
       val idx = Ann.ivfPqIndex(t(s, dir, "embeddings"), kCells = 4, m = 4,
         kCodes = 4, iters = 2, residual = true,
         coarse0 = Some(sharedCoarse(s, dir)))
       idx.copy(codes = idx.codes.localCheckpoint(true))
-    })
+    }
 
   /** Session-scoped OPQ-permuted residual index ([[ops.Ann.opqIvfPqIndex]])
     * — the third index variant next to raw (q133-style) and residual
     * ([[sharedIvfPqIndex]]): same coarse trajectory, same m/kCodes,
     * plus the balanced-energy coordinate permutation. q191 serves it. */
-  private val opqMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Seq[Int], Ann.IvfPqIndex)]
-  private def sharedOpqIndex(s: SparkSession, dir: String)
-      : (Seq[Int], Ann.IvfPqIndex) =
-    opqMemo.getOrElseUpdate((s, dir), {
+  private val sharedOpqIndex =
+    Artifacts.declare("opq_index", "q191_opq_recall") { (s, dir) =>
       val (perm, idx) = Ann.opqIvfPqIndex(t(s, dir, "embeddings"),
         kCells = 4, m = 4, kCodes = 4, iters = 2,
         coarse0 = Some(sharedCoarse(s, dir)))
       (perm, idx.copy(codes = idx.codes.localCheckpoint(true)))
-    })
-
-  /** Exact n-gram Jaccard on the LSH candidates — the build behind
-    * [[sharedVerifiedJaccard]]. Candidates come from the shared
-    * materialized table ([[sharedLshCandidates]]); the exploded shingle
-    * set (which only the Jaccard stage needs — sizes + intersection =
-    * two consumers) is persisted once. minhashSignatures-composed
-    * parity with this oracle is covered by PropertySpec's ≡ test. */
-  private def ngramJaccardBuild(s: SparkSession, dir: String): DataFrame = {
-    val cands = sharedLshCandidates(s, dir)
-    TextDedup.jaccard(cands, candidateShingles(s, dir, cands))
-  }
+    }
 
   /** Shingle sets of CANDIDATE docs only: semi-join the corpus to the
     * candidate id set BEFORE the shingle-set explode+distinct — at
@@ -464,11 +447,6 @@ object SparkEntry {
       TextStats.fingerprint(txt).as("fingerprint"),
       TextStats.qualityScore(txt).as("quality"))
   }
-
-  /** Brute-force cosine top-k ANN (exact baseline) — serves the shared
-    * materialized ranking every retrieval eval measures against. */
-  private def qAnnCosine(s: SparkSession, dir: String): DataFrame =
-    sharedExactTopK(s, dir)
 
   /** IVF-bucketed ANN — the scale path (no SQL oracle: rows-only check). */
   private def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
@@ -858,10 +836,8 @@ object SparkEntry {
     * materialized table: the inverted-index-build intermediate a
     * production corpus materializes anyway (token-scale, but written
     * once — the same trade the dedup candidate artifact makes). */
-  private val tfMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def sharedTermFreqs(s: SparkSession, dir: String): DataFrame =
-    tfMemo.getOrElseUpdate((s, dir),
+  private val sharedTermFreqs =
+    Artifacts.declare("term_freqs", "q61_heavy_hitters")((s, dir) =>
       termFreqs(t(s, dir, "documents")).localCheckpoint(true))
 
   /** Session-scoped MATERIALIZED bigram tables — the 2-gram siblings of
@@ -870,27 +846,21 @@ object SparkEntry {
     * and q113 (bigram NLL) — the corpus's bigram stream explodes once
     * per session. The unigram (tok, uc) rollup derives from the TF
     * artifact (no extra corpus pass at all). */
-  private val docBigramMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def sharedDocBigrams(s: SparkSession, dir: String): DataFrame =
-    docBigramMemo.getOrElseUpdate((s, dir),
+  private val sharedDocBigrams =
+    Artifacts.declare("doc_bigrams", "q58_repetition")((s, dir) =>
       ops.Fanout.fanout(t(s, dir, "documents"))
         .select(col("doc_id"),
           TextStats.shingleGen(col("text"), 2).as("bigram"))
         .groupBy(col("doc_id"), col("bigram"))
         .agg(count(lit(1)).as("k"))
         .localCheckpoint(true))
-  private val bigramMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def sharedBigramCounts(s: SparkSession, dir: String): DataFrame =
-    bigramMemo.getOrElseUpdate((s, dir),
+  private val sharedBigramCounts =
+    Artifacts.declare("bigram_counts", "q91_pmi")((s, dir) =>
       sharedDocBigrams(s, dir).groupBy(col("bigram"))
         .agg(sum(col("k")).as("bc"))
         .localCheckpoint(true))
-  private val uniMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def sharedUnigramCounts(s: SparkSession, dir: String): DataFrame =
-    uniMemo.getOrElseUpdate((s, dir),
+  private val sharedUnigramCounts =
+    Artifacts.declare("unigram_counts", "q61_heavy_hitters")((s, dir) =>
       sharedTermFreqs(s, dir).groupBy(col("term").as("tok"))
         .agg(sum(col("tf")).as("uc"))
         .localCheckpoint(true))
@@ -899,20 +869,16 @@ object SparkEntry {
     * decontamination artifact q54 (exact check), q158 (bloom-staged)
     * and the q182 funnel all probe: the 5-gram explode runs once per
     * session. */
-  private val sh5Memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def sharedShingles5(s: SparkSession, dir: String): DataFrame =
-    sh5Memo.getOrElseUpdate((s, dir),
+  private val sharedShingles5 =
+    Artifacts.declare("shingles5", "q54_contamination")((s, dir) =>
       TextDedup.shingleSet(t(s, dir, "documents"), col("doc_id"),
         col("text"), 5).localCheckpoint(true))
 
   /** Session-scoped BPE merge list (driver state): ONE q112 training
     * trajectory serves q112's emission and q126's fertility encode —
     * the tokenizer is trained once per corpus by construction. */
-  private val bpeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), ops.Bpe.Merges]
-  private def sharedBpeMerges(s: SparkSession, dir: String): ops.Bpe.Merges =
-    bpeMemo.getOrElseUpdate((s, dir),
+  private val sharedBpeMerges =
+    Artifacts.declare("bpe_merges", "q112_bpe_merges")((s, dir) =>
       ops.Bpe.train(t(s, dir, "documents"), col("text"), 2))
 
   /** TF-IDF scoring: top-3 terms per document by tf·idf with smoothed
@@ -1142,21 +1108,17 @@ object SparkEntry {
     * junk/outlier). Reuses the one shared tf aggregation (q64/q66
     * contract); the probability table is vocabulary-sized and
     * broadcast; per-doc sums are map-side combinable. The corpus
-    * shuffles once at any scale. */
-  private def qUnigramLogprob(s: SparkSession, dir: String): DataFrame =
-    sharedUnigramNll(s, dir)
-
-  /** Session-scoped MATERIALIZED unigram-NLL score table — the third
+    * shuffles once at any scale.
+    *
+    * Session-scoped MATERIALIZED unigram-NLL score table — the third
     * artifact family next to the dedup pair and the ANN trio: a corpus
     * is SCORED once, then every admission/diagnostic consumer (q73
     * serves it; q137's perplexity gate and q140's length-bias
     * correlation read it) works off the doc-sized score table instead
     * of re-running tokenize + tf + probability join (the tf input is
     * itself the shared materialized table). */
-  private val nllMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def sharedUnigramNll(s: SparkSession, dir: String): DataFrame =
-    nllMemo.getOrElseUpdate((s, dir), {
+  private val sharedUnigramNll =
+    Artifacts.declare("unigram_nll", "q73_unigram_nll") { (s, dir) =>
       val tf = sharedTermFreqs(s, dir)
       val totals = tf.groupBy(col("term")).agg(sum(col("tf")).as("ctf"))
       val grand = totals.agg(sum(col("ctf")).cast("double").as("gt"))
@@ -1171,7 +1133,7 @@ object SparkEntry {
               col("tf").cast("double") * log(col("p")), 1e9) /
             sum(col("tf")).cast("double"), 4).as("nll"))
         .localCheckpoint(true)
-    })
+    }
 
   /** Per-label embedding centroids (mean pooling): the k-means E-step /
     * IVF codebook computation, in the relational form that scales —
@@ -1197,14 +1159,9 @@ object SparkEntry {
     * [[graft.plans.DisjunctiveJoinRewrite]] optimizer rule to turn the
     * BroadcastNestedLoopJoin shape into a union of two hash joins.
     * Same semantics as q08 (which hand-writes the two-join form); the
-    * oracle runs the OR join literally. The rule rides along via
-    * `spark.sql.extensions` in driver sessions and is attached to live
-    * sessions here (idempotent: the rewrite leaves no OR-joins behind). */
+    * oracle runs the OR join literally. The rule comes with the
+    * session: [[GraftSession]] installs it through [[GraftExtensions]]. */
   private def qOrJoinRewrite(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.DisjunctiveJoinRewrite
-    if (!s.experimental.extraOptimizations.contains(DisjunctiveJoinRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ DisjunctiveJoinRewrite
     val o = t(s, dir, "orders").withColumn("key_iata",
       when(col("o_custkey") % 7 === 0, lit(null).cast("long"))
         .otherwise(col("o_custkey")))
@@ -1419,16 +1376,8 @@ object SparkEntry {
     * the same order, one category slice): degree-oriented wedge join —
     * each triangle counted once, out-degree bounded by O(√E) on any
     * graph, so the hub-degree² blow-up never happens. */
-  private def qTriangles(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .filter(col("l_partkey") % 4 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val e = li.join(li.select(col("l_orderkey"), col("l_partkey").as("p2")),
-        "l_orderkey")
-      .filter(col("l_partkey") < col("p2"))
-      .select(col("l_partkey").as("src"), col("p2").as("dst"))
-    ops.Graph.triangleCount(e, "src", "dst")
-  }
+  private def qTriangles(s: SparkSession, dir: String): DataFrame =
+    ops.Graph.triangleCount(coPurchaseEdges(s, dir), "src", "dst")
 
   /** Event-type Markov transition matrix over per-user event sequences:
     * lead() pairs on one (user, time) window, then a 5×5-sized count
@@ -1902,12 +1851,9 @@ object SparkEntry {
 
   /** Prefix-filtered EXACT Jaccard self-join (AllPairs/PPJoin family) at
     * t = 3/5 — the lossless candidate generator next to the LSH family
-    * (q21 candidates can miss true pairs; prefix filtering cannot). */
-  private def prefixSimjoinBuild(s: SparkSession, dir: String): DataFrame =
-    TextDedup.prefixFilterJoin(t(s, dir, "documents"),
-      col("doc_id"), col("text"), 3, 3, 5)
-
-  /** Session-scoped MATERIALIZED PPJoin verified-pair table — the
+    * (q21 candidates can miss true pairs; prefix filtering cannot).
+    *
+    * Session-scoped MATERIALIZED PPJoin verified-pair table — the
     * [[sharedVerifiedJaccard]] story applied to the lossless candidate
     * family: the prefix index + positional filter + exact verify run
     * once per corpus, every later read serves the pair-sized artifact.
@@ -1915,11 +1861,10 @@ object SparkEntry {
     * machinery per run — the #1 steady bench cost after round 6.) The
     * mining DAG's plan shape stays covered by the q116 plan contract,
     * which builds the un-materialized form directly. */
-  private val ppjMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def sharedPrefixSimPairs(s: SparkSession, dir: String): DataFrame =
-    ppjMemo.getOrElseUpdate((s, dir),
-      prefixSimjoinBuild(s, dir).localCheckpoint(true))
+  private val sharedPrefixSimPairs =
+    Artifacts.declare("prefix_sim_pairs", "q116_prefix_simjoin")((s, dir) =>
+      TextDedup.prefixFilterJoin(t(s, dir, "documents"),
+        col("doc_id"), col("text"), 3, 3, 5).localCheckpoint(true))
 
   /** Content-defined chunking (expected chunk = 8 tokens) with
     * corpus-wide per-chunk occurrence counts — chunk-level dedup. */
@@ -2128,7 +2073,7 @@ object SparkEntry {
     * each source cut at its OWN p75 NLL (style differs by source, so a
     * global threshold over/under-prunes); per-source admission stats. */
   private def qPerplexityGate(s: SparkSession, dir: String): DataFrame = {
-    val nll = qUnigramLogprob(s, dir).select(col("doc_id"), col("nll"))
+    val nll = sharedUnigramNll(s, dir).select(col("doc_id"), col("nll"))
     val src = t(s, dir, "documents").select(col("doc_id"), col("source"))
     ops.Sampling.perplexityGate(src.join(nll, "doc_id"), col("source"),
       col("nll"), 0.75)
@@ -2162,7 +2107,7 @@ object SparkEntry {
     * n_chars against the q73 unigram NLL — a strong correlation means
     * the perplexity gate is a length filter in disguise. */
   private def qLengthBias(s: SparkSession, dir: String): DataFrame = {
-    val nll = qUnigramLogprob(s, dir).select(col("doc_id"), col("nll"))
+    val nll = sharedUnigramNll(s, dir).select(col("doc_id"), col("nll"))
     val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
       col("n_chars"))
     ops.Quality.groupedCorr(d.join(nll, "doc_id"), col("source"),
@@ -2326,10 +2271,8 @@ object SparkEntry {
     * self-eval sibling of [[sharedNbHoldoutScores]]: trained on ALL
     * docs off the TF artifact, scored on all docs, shared by q154
     * (confusion) and q227 (confident-learning label audit). */
-  private val nbFullMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def sharedNbFullScores(s: SparkSession, dir: String): DataFrame =
-    nbFullMemo.getOrElseUpdate((s, dir), {
+  private val sharedNbFullScores =
+    Artifacts.declare("nb_full_scores", "q154_nb_confusion") { (s, dir) =>
       val docs = t(s, dir, "documents")
       val tf = sharedTermFreqs(s, dir)
       val model = ops.Quality.nbTrain(docs, col("doc_id"), col("text"),
@@ -2337,7 +2280,7 @@ object SparkEntry {
           docs.select(col("doc_id"), col("lang").as("lab")), "doc_id")))
       ops.Quality.nbScores(model, docs, col("doc_id"), col("text"),
         docTf0 = Some(tf)).localCheckpoint(true)
-    })
+    }
 
   /** JL sign-projection retrieval eval at 8/16 dims vs the exact
     * full-dim ranking — the truncation eval's cousin for embeddings
@@ -2473,7 +2416,7 @@ object SparkEntry {
     * line up column-for-column with q142's raw/residual rows (the same
     * evidence discipline the residual claim got). Serving cost: one
     * search per tier over the materialized code table; training paid
-    * once per session by the memo. */
+    * once per session by the artifact. */
   private def qOpqRecall(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val (perm, idx) = sharedOpqIndex(s, dir)
@@ -2535,12 +2478,9 @@ object SparkEntry {
     * frame, shared by q156 (argmax confusion) and q169 (calibration):
     * the classifier trains ONCE per session, the holdout is scored
     * once, and every eval reads the |holdout|·|labels| score table
-    * (the nllMemo/ANN-trio artifact doctrine). */
-  private val nbHoldoutMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (ops.Quality.NbModel, DataFrame)]
-  private def sharedNbHoldoutScores(s: SparkSession, dir: String)
-      : (ops.Quality.NbModel, DataFrame) =
-    nbHoldoutMemo.getOrElseUpdate((s, dir), {
+    * (the NLL/ANN-trio artifact doctrine). */
+  private val sharedNbHoldoutScores =
+    Artifacts.declare("nb_holdout_scores", "q156_nb_holdout") { (s, dir) =>
       val docs = t(s, dir, "documents")
       // both halves' term counts slice the session TF artifact — the
       // corpus is tokenized once per session, not once per model
@@ -2554,7 +2494,7 @@ object SparkEntry {
           docTf0 = Some(tf.filter(col("doc_id") % 3 === 0)))
         .localCheckpoint(true)
       (model, sc)
-    })
+    }
 
   /** Greedy MMR re-ranking proper over a 10-deep shortlist: 4 picks at
     * λ=0.7 — the iterative relevance/novelty trade-off q153's quota
@@ -2696,16 +2636,13 @@ object SparkEntry {
     * per corpus and served many (the q21/q22 split — q171 remains the
     * BUILD operator, constructing the full MM DAG under its plan
     * contract; q188's calibration reads these artifacts). */
-  private val btMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private def sharedBt(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    btMemo.getOrElseUpdate((s, dir), {
+  private val sharedBt =
+    Artifacts.declare("bt", "q188_bt_calibration") { (s, dir) =>
       val duels = btDuels(s, dir).localCheckpoint(true)
       val strengths = ops.Pref.bradleyTerry(duels, col("win"), col("lose"))
         .select(col("item"), col("strength")).localCheckpoint(true)
       (duels, strengths)
-    })
+    }
 
   /** BT fit calibration: per source pair, the model's predicted win
     * rate vs the observed one — q171's goodness-of-fit, served from
@@ -3707,37 +3644,26 @@ object SparkEntry {
   private def qCartography(s: SparkSession, dir: String): DataFrame =
     ops.Quality.cartographyReport(t(s, dir, "documents"), col("doc_id"),
       col("text"), col("lang"), k = 5,
-      scores0 = Some(kfoldScoresBuild(s, dir)))
+      scores0 = Some(sharedKfoldScores(s, dir)))
 
-  /** The k-fold NB score-table BUILD (fold-model training + all-pairs
-    * serve). q292 is the DESIGNATED BUILD-PAYER — it calls this
-    * directly, so the full training DAG runs (and is timed) on every
-    * q292 sample, the q21/LSH convention (VERDICT r14 #6 closed the
-    * accounting hole where the memoized artifact survived Bench's
-    * clearCache and no steady-state sample paid the training). The
+  /** Session-scoped MATERIALIZED k-fold NB score table served to q223 (k-fold NB
+    * eval), q292 (cartography) and q330 (confident learning) — the
+    * consumers build IDENTICAL fold models and differ only in which
+    * (model, doc) pairs they read ([[ops.Quality.kfoldScores]], serve =
+    * "all"), so the models train and serve ONCE per session and each
+    * consumer runs only its own window/rollup tail (VERDICT r13 #2). The
     * label side broadcasts: a shuffle join would hand the serve-side
     * fanout + model probe to whatever partition count AQE leaves on
     * the join read; a BHJ streams it over the TF artifact's own
     * partitions. */
-  private def kfoldScoresBuild(s: SparkSession, dir: String): DataFrame = {
-    val tf = sharedTermFreqs(s, dir)
-    val docs = t(s, dir, "documents")
-    ops.Quality.kfoldScores(docs, col("doc_id"), col("text"),
-      col("lang"), k = 5, docTf0 = Some(tf.join(broadcast(
-        docs.select(col("doc_id"), col("lang").as("lab"))), "doc_id")))
-  }
-
-  private val kfoldMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  /** Session-scoped MATERIALIZED k-fold NB score table served to q330
-    * (confident learning) and q223 (k-fold NB eval) — the consumers
-    * build IDENTICAL fold models and differ only in which (model, doc)
-    * pairs they read ([[ops.Quality.kfoldScores]], serve = "all"), so
-    * the models train and serve ONCE per session and each consumer
-    * runs only its own window/rollup tail (VERDICT r13 #2). q292 pays
-    * the build in full ([[kfoldScoresBuild]]). */
-  private def sharedKfoldScores(s: SparkSession, dir: String): DataFrame =
-    kfoldMemo.getOrElseUpdate((s, dir), kfoldScoresBuild(s, dir))
+  private val sharedKfoldScores =
+    Artifacts.declare("kfold_scores", "q223_kfold_nb") { (s, dir) =>
+      val tf = sharedTermFreqs(s, dir)
+      val docs = t(s, dir, "documents")
+      ops.Quality.kfoldScores(docs, col("doc_id"), col("text"),
+        col("lang"), k = 5, docTf0 = Some(tf.join(broadcast(
+          docs.select(col("doc_id"), col("lang").as("lab"))), "doc_id")))
+    }
 
   /** Chapman capture–recapture estimate of the total near-dup pair
     * population from the two independent dedup methods' catches —
@@ -4116,17 +4042,9 @@ object SparkEntry {
     * QUALITY number the graph shelf's structure finders (q63 CC, q172
     * label prop) lacked: do co-purchases concentrate within brands,
     * or is the partition no better than random wiring (Q ≈ 0)? */
-  private def qModularity(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .filter(col("l_partkey") % 4 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val e = li.join(li.select(col("l_orderkey"), col("l_partkey").as("p2")),
-        "l_orderkey")
-      .filter(col("l_partkey") < col("p2"))
-      .select(col("l_partkey").as("src"), col("p2").as("dst"))
-    ops.Graph.modularity(e, "src", "dst",
+  private def qModularity(s: SparkSession, dir: String): DataFrame =
+    ops.Graph.modularity(coPurchaseEdges(s, dir), "src", "dst",
       t(s, dir, "part"), "p_partkey", "p_brand")
-  }
 
   /** t-closeness audit over the q333 quasi-classes
     * ([[ops.Quality.tCloseness]], Li et al. 2007) — the privacy
@@ -4227,16 +4145,8 @@ object SparkEntry {
     * ([[ops.Graph.clusteringCoefficient]], Watts & Strogatz 1998) —
     * family-vs-chain tightness per node, on the same oriented-wedge
     * machinery. */
-  private def qClusteringCoef(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .filter(col("l_partkey") % 4 === 0)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val e = li.join(li.select(col("l_orderkey"), col("l_partkey").as("p2")),
-        "l_orderkey")
-      .filter(col("l_partkey") < col("p2"))
-      .select(col("l_partkey").as("src"), col("p2").as("dst"))
-    ops.Graph.clusteringCoefficient(e, "src", "dst")
-  }
+  private def qClusteringCoef(s: SparkSession, dir: String): DataFrame =
+    ops.Graph.clusteringCoefficient(coPurchaseEdges(s, dir), "src", "dst")
 
   /** The q94/q278 co-purchase part graph (parts sharing an order). */
   private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
@@ -4512,15 +4422,14 @@ object SparkEntry {
     * not 5 pipeline re-runs. Gate parameters/membership are computed
     * on the FULL corpus (the artifact semantic, matching each
     * component query), then applied cumulatively. keep_rate is
-    * stage-over-previous-stage (ingest = 1.0). */
-  /** Session-scoped MATERIALIZED per-doc funnel flag table — the
+    * stage-over-previous-stage (ingest = 1.0).
+    *
+    * Session-scoped MATERIALIZED per-doc funnel flag table — the
     * (doc_id, source, n_tok, f2..f5) gate decisions q182's corpus
     * rollup and q183's per-source breakdown both read: the gates
     * evaluate once per session. */
-  private val funnelMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def sharedFunnelFlags(s: SparkSession, dir: String): DataFrame =
-    funnelMemo.getOrElseUpdate((s, dir), {
+  private val sharedFunnelFlags =
+    Artifacts.declare("funnel_flags", "q182_curation_funnel") { (s, dir) =>
       val docs = t(s, dir, "documents")
       val ntok = sharedTermFreqs(s, dir).groupBy(col("doc_id"))
         .agg(sum(col("tf")).as("n_tok"))
@@ -4556,7 +4465,7 @@ object SparkEntry {
           (col("nll") <= col("threshold")).as("f4"),
           col("bad").isNull.as("f5"))
         .localCheckpoint(true)
-    })
+    }
 
   /** The q182/q183 stage ladder: cumulative conjunction of the gates. */
   private def funnelStages: Seq[(Long, String, Column)] = Seq(
@@ -4775,10 +4684,10 @@ object SparkEntry {
     "q19_distinct_count" -> (qDistinctCount _),
     "q20_dedup_exact" -> (qDedupExact _),
     "q21_minhash_lsh" -> (qMinhashLsh _),
-    "q22_ngram_jaccard" -> (sharedVerifiedJaccard _),
+    "q22_ngram_jaccard" -> sharedVerifiedJaccard,
     "q23_simhash" -> (qSimhash _),
     "q24_text_stats" -> (qTextStats _),
-    "q25_ann_cosine" -> (qAnnCosine _),
+    "q25_ann_cosine" -> sharedExactTopK,
     "q26_media_meta" -> (qMediaMeta _),
     "q27_ann_ivf" -> (qAnnIvf _),
     "q28_stream_pipeline" -> (qStreamPipeline _),
@@ -4826,7 +4735,7 @@ object SparkEntry {
     "q70_hist_quantiles" -> (qHistQuantiles _),
     "q71_mixture" -> (qMixture _),
     "q72_snapshot_diff" -> (qSnapshotDiff _),
-    "q73_unigram_nll" -> (qUnigramLogprob _),
+    "q73_unigram_nll" -> sharedUnigramNll,
     "q74_centroids" -> (qCentroids _),
     "q75_or_join_rewrite" -> (qOrJoinRewrite _),
     "q76_kmeans" -> (qKmeans _),
@@ -4869,7 +4778,7 @@ object SparkEntry {
     "q113_bigram_nll" -> (qBigramNll _),
     "q114_leakage_split" -> (qLeakageSplit _),
     "q115_silhouette" -> (qSilhouette _),
-    "q116_prefix_simjoin" -> (sharedPrefixSimPairs _),
+    "q116_prefix_simjoin" -> sharedPrefixSimPairs,
     "q117_cdc_chunks" -> (qCdcChunks _),
     "q118_min_k_sample" -> (qMinKSample _),
     "q119_zipf_fit" -> (qZipfFit _),

@@ -475,8 +475,8 @@ object Multimodal {
     val spark0 = corpus.sparkSession
     val qb = broadcast(queries.select(col("q_id"), col("q_vec"),
       signBucketOf(col("q_vec")).as("q_bucket")))
-    val kdf = broadcast(spark0.createDataFrame(
-      ks.map(k => Tuple1(k.toLong))).toDF("k"))
+    val kdf = spark0.createDataFrame(
+      ks.map(k => Tuple1(k.toLong))).toDF("k")
     val nq = queries.agg(count(lit(1)).as("n_queries"))
     def evalOf(scored: DataFrame, method: String): DataFrame = {
       val w = Window.partitionBy(col("q_id"))
@@ -487,7 +487,7 @@ object Multimodal {
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= kMax && col("n_id") === col("q_id"))
         .groupBy(col("q_id")).agg(min(col("rank")).as("hit_rank"))
-      val hitsPerK = hitRank.crossJoin(kdf)
+      val hitsPerK = hitRank.crossJoin(broadcast(kdf))
         .filter(col("hit_rank") <= col("k"))
         .groupBy(col("k")).agg(count(lit(1)).as("h"))
       kdf.join(broadcast(hitsPerK), Seq("k"), "left")

@@ -1333,8 +1333,7 @@ object Quality {
     * exactly this ≤10-row additive table. */
   private[graft] def benfordFromDigits(per: DataFrame): DataFrame = {
     import graft.expr.Snap
-    val digits = broadcast(per.sparkSession.range(1, 10)
-      .select(col("id").as("digit")))
+    val digits = per.sparkSession.range(1, 10).select(col("id").as("digit"))
     val tot = per.agg(sum(when(col("d").isNotNull, col("o"))
         .otherwise(lit(0L))).as("n"),
       sum(when(col("d").isNull, col("o")).otherwise(lit(0L)))
@@ -1343,7 +1342,7 @@ object Quality {
     val dD = col("digit").cast("double")
     val pExp = log((dD + lit(1.0)) / dD) / log(lit(10.0))
     val rows = digits
-      .join(per.withColumnRenamed("d", "digit"), Seq("digit"), "left")
+      .join(broadcast(per.withColumnRenamed("d", "digit")), Seq("digit"), "left")
       .crossJoin(broadcast(tot))
       .select(col("digit"), coalesce(col("o"), lit(0L)).as("n_obs"),
         col("n"), col("n_skipped"), pExp.as("pe"))

@@ -1158,16 +1158,16 @@ object TextDedup {
     * (threshold, n_pairs, n_docs_affected). */
   def dedupThresholdSweep(pairs: DataFrame, a: Column, b: Column,
       sim: Column): DataFrame = {
-    val ths = broadcast(pairs.sparkSession.range(1, 10)
-      .select((col("id").cast("double") / lit(10.0)).as("threshold")))
+    val ths = pairs.sparkSession.range(1, 10)
+      .select((col("id").cast("double") / lit(10.0)).as("threshold"))
     val p = pairs.select(a.as("a"), b.as("b"), sim.cast("double").as("s"))
-    val hit = p.crossJoin(ths).filter(col("s") >= col("threshold"))
+    val hit = p.crossJoin(broadcast(ths)).filter(col("s") >= col("threshold"))
     val np = hit.groupBy(col("threshold")).agg(count(lit(1)).as("np"))
     val nd = hit.select(col("threshold"),
         explode(array(col("a"), col("b"))).as("d"))
       .groupBy(col("threshold")).agg(countDistinct(col("d")).as("nd"))
-    ths.join(np, Seq("threshold"), "left")
-      .join(nd, Seq("threshold"), "left")
+    ths.join(broadcast(np), Seq("threshold"), "left")
+      .join(broadcast(nd), Seq("threshold"), "left")
       .select(col("threshold"),
         coalesce(col("np"), lit(0L)).as("n_pairs"),
         coalesce(col("nd"), lit(0L)).as("n_docs_affected"))

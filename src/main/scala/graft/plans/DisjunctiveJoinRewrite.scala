@@ -51,8 +51,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * physically deduplicated by exchange/subquery reuse.
   *
   * Registered via `SparkSessionExtensions.injectOptimizerRule`
-  * ([[graft.GraftExtensions]]); also attachable to a live session with
-  * `spark.experimental.extraOptimizations`. Runs to fixpoint safely:
+  * ([[graft.GraftExtensions]]). Runs to fixpoint safely:
   * rewritten branches carry non-disjunctive conditions.
   */
 object DisjunctiveJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {

@@ -136,6 +136,14 @@ class PlanContractSpec extends SparkSpec {
     assert(p.contains("Union"), p.take(1200))
   }
 
+  test("q75: building the query leaves its session's optimizer rules alone") {
+    // the rule comes from GraftExtensions; a query must not append it
+    val before = spark.experimental.extraOptimizations
+    plan("q75_or_join_rewrite")
+    assert(spark.experimental.extraOptimizations == before)
+    assert(!before.contains(graft.plans.DisjunctiveJoinRewrite))
+  }
+
   test("q76: k-means assignment is joinless — literal centroids, one exchange") {
     val p = plan("q76_kmeans")
     // the output plan is the final assign+M-step: argmin over literal

@@ -47,4 +47,23 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(builders == Seq("GraftSession.scala"),
       s"SparkSession.builder outside graft.GraftSession: ${builders.mkString(", ")}")
   }
+
+  test("shared artifacts are kept in one place: TrieMap only in Artifacts.scala") {
+    val keepers = scalaSources("src/main")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
+        .contains("TrieMap"))
+      .map(_.getFileName.toString)
+    assert(keepers.forall(_ == "Artifacts.scala"),
+      s"TrieMap outside graft.Artifacts: ${keepers.mkString(", ")}")
+  }
+
+  test("no query changes its session: experimental.extraOptimizations is never assigned") {
+    val setter = "experimental\\.extraOptimizations\\s*=(?!=)".r
+    val setters = scalaSources("src/main")
+      .filter(p => setter.findFirstIn(
+        new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+      .map(_.getFileName.toString)
+    assert(setters.isEmpty,
+      s"extraOptimizations assigned in: ${setters.mkString(", ")}")
+  }
 }
