@@ -1851,20 +1851,10 @@ object SparkEntry {
 
   /** Prefix-filtered EXACT Jaccard self-join (AllPairs/PPJoin family) at
     * t = 3/5 — the lossless candidate generator next to the LSH family
-    * (q21 candidates can miss true pairs; prefix filtering cannot).
-    *
-    * Session-scoped MATERIALIZED PPJoin verified-pair table — the
-    * [[sharedVerifiedJaccard]] story applied to the lossless candidate
-    * family: the prefix index + positional filter + exact verify run
-    * once per corpus, every later read serves the pair-sized artifact.
-    * (This was the last dedup-family query rebuilding its candidate
-    * machinery per run — the #1 steady bench cost after round 6.) The
-    * mining DAG's plan shape stays covered by the q116 plan contract,
-    * which builds the un-materialized form directly. */
-  private val sharedPrefixSimPairs =
-    Artifacts.declare("prefix_sim_pairs", "q116_prefix_simjoin")((s, dir) =>
-      TextDedup.prefixFilterJoin(t(s, dir, "documents"),
-        col("doc_id"), col("text"), 3, 3, 5).localCheckpoint(true))
+    * (q21 candidates can miss true pairs; prefix filtering cannot). */
+  private def qPrefixSimJoin(s: SparkSession, dir: String): DataFrame =
+    TextDedup.prefixFilterJoin(t(s, dir, "documents"),
+      col("doc_id"), col("text"), 3, 3, 5)
 
   /** Content-defined chunking (expected chunk = 8 tokens) with
     * corpus-wide per-chunk occurrence counts — chunk-level dedup. */
@@ -2631,24 +2621,14 @@ object SparkEntry {
     ops.Pref.bradleyTerry(btDuels(s, dir), col("win"), col("lose"))
       .withColumnRenamed("item", "source")
 
-  /** Session-scoped BT artifacts — the materialized duel table and the
-    * trained strength vector: preference aggregates are trained once
-    * per corpus and served many (the q21/q22 split — q171 remains the
-    * BUILD operator, constructing the full MM DAG under its plan
-    * contract; q188's calibration reads these artifacts). */
-  private val sharedBt =
-    Artifacts.declare("bt", "q188_bt_calibration") { (s, dir) =>
-      val duels = btDuels(s, dir).localCheckpoint(true)
-      val strengths = ops.Pref.bradleyTerry(duels, col("win"), col("lose"))
-        .select(col("item"), col("strength")).localCheckpoint(true)
-      (duels, strengths)
-    }
-
   /** BT fit calibration: per source pair, the model's predicted win
-    * rate vs the observed one — q171's goodness-of-fit, served from
-    * the shared duel/strength artifacts. */
+    * rate vs the observed one — q171's goodness-of-fit. The duel table
+    * feeds every MM round and the calibration, and the strength vector
+    * both sides of the pair join, so each is materialized once. */
   private def qBtCalibration(s: SparkSession, dir: String): DataFrame = {
-    val (duels, strengths) = sharedBt(s, dir)
+    val duels = btDuels(s, dir).localCheckpoint(true)
+    val strengths = ops.Pref.bradleyTerry(duels, col("win"), col("lose"))
+      .select(col("item"), col("strength")).localCheckpoint(true)
     ops.Pref.btCalibration(duels, col("win"), col("lose"), strengths)
   }
 
@@ -4778,7 +4758,7 @@ object SparkEntry {
     "q113_bigram_nll" -> (qBigramNll _),
     "q114_leakage_split" -> (qLeakageSplit _),
     "q115_silhouette" -> (qSilhouette _),
-    "q116_prefix_simjoin" -> sharedPrefixSimPairs,
+    "q116_prefix_simjoin" -> (qPrefixSimJoin _),
     "q117_cdc_chunks" -> (qCdcChunks _),
     "q118_min_k_sample" -> (qMinKSample _),
     "q119_zipf_fit" -> (qZipfFit _),

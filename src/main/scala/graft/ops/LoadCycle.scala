@@ -27,9 +27,14 @@ import graft.expr.Flags
   */
 object LoadCycle {
 
-  /** All warehouse state; treat as immutable, swap wholesale per cycle. */
+  /** All warehouse state; treat as immutable, swap wholesale per cycle.
+    * `curated` is [[curatedView]] stored with this version, when a
+    * committed version holds one ([[graft.stream.WarehouseSink]]); it
+    * must then be exactly the join over these four tables. [[run]]
+    * returns a version without one. */
   case class Warehouse(dimAirline: DataFrame, dimAirport: DataFrame,
-      dimRoute: DataFrame, fact: DataFrame, staging: DataFrame)
+      dimRoute: DataFrame, fact: DataFrame, staging: DataFrame,
+      curated: Option[DataFrame] = None)
 
   /** Stable surrogate id: IATA identifies the row when present at insert,
     * otherwise ICAO (the reference's two insert paths,
@@ -40,15 +45,17 @@ object LoadCycle {
       coalesce(concat(lit("i:"), iata), concat(lit("c:"), icao)))
 
   /** Empty dims/fact matching `staging`'s column types (first-cycle
-    * bootstrap). */
+    * bootstrap). Columns are in the order [[run]] returns them (a dim
+    * upsert puts its last key, `icao`, first), so these schemas are the
+    * ones every version's tables are written with. */
   def emptyWarehouse(staging: DataFrame): Warehouse = {
     val never = lit(false)
     val s = staging.filter(never)
     Warehouse(
-      dimAirline = s.select(col("airline_iata").as("iata"),
-        col("airline_icao").as("icao"), col("airline_name")),
-      dimAirport = s.select(col("dep_airport_iata").as("iata"),
-        col("dep_airport_icao").as("icao"), col("dep_airport").as("airport_name")),
+      dimAirline = s.select(col("airline_icao").as("icao"),
+        col("airline_iata").as("iata"), col("airline_name")),
+      dimAirport = s.select(col("dep_airport_icao").as("icao"),
+        col("dep_airport_iata").as("iata"), col("dep_airport").as("airport_name")),
       dimRoute = s.select(Flags.surrogateId(col("flight_key")).as("dep_airport_id"),
         Flags.surrogateId(col("flight_key")).as("arr_airport_id")),
       fact = factShape(s.withColumn("airline_id", lit(null).cast("long"))
@@ -64,10 +71,11 @@ object LoadCycle {
     "arr_terminal", "arr_gate", "arr_scheduled", "arr_estimated",
     "arr_actual", "arr_delay_min")
 
+  /** The fact's columns, in the order [[Merge.factMerge]] returns them. */
   private def factShape(latest: DataFrame, lastUpdated: Column): DataFrame =
     latest.select(Seq(col("flight_key")) ++ TimelineCols.map(col) ++ Seq(
-      col("airline_id"), col("route_id"), col("ingest_time"),
-      lastUpdated.as("last_updated")): _*)
+      lastUpdated.as("last_updated"), col("airline_id"), col("route_id"),
+      col("ingest_time")): _*)
 
   /** One load cycle; returns the next warehouse version.
     *
@@ -182,8 +190,10 @@ object LoadCycle {
 
   /** J4: the curated denormalized view
     * (/root/reference/db/01_views.sql:44-83) — fact left-joined to
-    * airline, route, and airport twice; broadcast dims. */
-  def curatedView(wh: Warehouse): DataFrame = {
+    * airline, route, and airport twice; broadcast dims. A version that
+    * stores the view serves it; for any other this join is computed
+    * (`wh.copy(curated = None)` forces the join). */
+  def curatedView(wh: Warehouse): DataFrame = wh.curated.getOrElse {
     val airline = wh.dimAirline.select(
       dimId("airline", col("iata"), col("icao")).as("a_id"),
       col("iata").as("airline_iata_code"), col("airline_name"))

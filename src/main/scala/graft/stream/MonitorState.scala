@@ -38,6 +38,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * previous committed epoch is kept until the next commit — a crash
   * between the state commit for epoch N and the stream's own offset
   * commit replays N, which [[alreadyMerged]] absorbs.
+  *
+  * `empty` declares the state table: every committed table has its
+  * schema and is read back with it, so no read runs a footer job.
   */
 final class MonitorState(spark: SparkSession, dir: String,
     empty: DataFrame) {
@@ -63,7 +66,7 @@ final class MonitorState(spark: SparkSession, dir: String,
 
   private val ref = new AtomicReference[DataFrame](
     if (lastEpoch < 0L) empty.localCheckpoint(eager = true)
-    else spark.read.parquet(s"$dir/e=$lastEpoch"))
+    else spark.read.schema(empty.schema).parquet(s"$dir/e=$lastEpoch"))
 
   /** Epoch already merged into durable state (an at-least-once replay)
     * — merging it again would double-count. */
@@ -87,7 +90,7 @@ final class MonitorState(spark: SparkSession, dir: String,
     val target = s"$dir/e=$epochId"
     // bounded tables: one file keeps reload and listing O(1)
     next.coalesce(1).write.mode("overwrite").parquet(target)
-    val durable = spark.read.parquet(target)
+    val durable = spark.read.schema(empty.schema).parquet(target)
     ref.set(durable)
     val prev = lastEpoch
     lastEpoch = epochId

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import graft.ops.LoadCycle
 import graft.ops.LoadCycle.Warehouse
 
@@ -15,9 +16,9 @@ import graft.ops.LoadCycle.Warehouse
   *
   * Two properties the reference delegates to Postgres, done Spark-side:
   * - **Transactionality (U6)**: compute-all-then-swap. Each cycle's
-  *   dims/fact are WRITTEN to a fresh versioned directory and re-read
-  *   before the version pointer moves — readers see either version N or
-  *   N+1, never a mix (SURVEY §7.4(5)).
+  *   dims/fact, and the curated view over them, are WRITTEN to a fresh
+  *   versioned directory and re-read before the version pointer moves —
+  *   readers see either version N or N+1, never a mix (SURVEY §7.4(5)).
   * - **Bounded lineage**: materializing per cycle also cuts the logical
   *   plan chain — without it, cycle N's plan nests all N−1 predecessors.
   *
@@ -35,12 +36,20 @@ class WarehouseSink(spark: SparkSession, baseDir: String) {
   private def fs() = new org.apache.hadoop.fs.Path(baseDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** A table of a version, read with the schema it was written with:
+    * a read that infers the schema runs a job for the parquet footer. */
+  private def read(dir: String, name: String, schema: StructType) =
+    spark.read.schema(schema).parquet(s"$dir/$name")
+
+  /** Writes version N: the four tables, then the curated view over the
+    * re-read tables as a fifth, `curated`, so every read of version N
+    * serves one scan instead of four joins. */
   private def materialize(wh: Warehouse): Warehouse = {
     version += 1
     val dir = s"$baseDir/v$version"
     def swap(df: DataFrame, name: String): DataFrame = {
       df.write.mode("overwrite").parquet(s"$dir/$name")
-      spark.read.parquet(s"$dir/$name")
+      read(dir, name, df.schema)
     }
     val next = Warehouse(
       swap(wh.dimAirline, "dim_airline"),
@@ -48,12 +57,13 @@ class WarehouseSink(spark: SparkSession, baseDir: String) {
       swap(wh.dimRoute, "dim_route"),
       swap(wh.fact, "fact"),
       wh.staging)
-    // commit marker LAST: a version is recoverable only once all four
+    val curated = swap(LoadCycle.curatedView(next), "curated")
+    // commit marker LAST: a version is recoverable only once all five
     // tables are fully written — a crash mid-materialize leaves an
     // uncommitted directory that recovery skips (and the next cycle's
     // version counter moves past, so it is never half-read)
     fs().create(new org.apache.hadoop.fs.Path(s"$dir/_COMMITTED"), true).close()
-    next
+    next.copy(curated = Some(curated))
   }
 
   /** Latest COMMITTED version under `baseDir`, or 0 if none exist.
@@ -113,22 +123,34 @@ class WarehouseSink(spark: SparkSession, baseDir: String) {
   def start(staged: DataFrame, checkpointDir: String): StreamingQuery = {
     val (recovered, newest) = latestPersistedVersion()
     if (current.get() == null) version = math.max(recovered, newest)
+    // the declared shape of every table: the bootstrap warehouse, and the
+    // schemas a recovered version is read with
+    val shape = LoadCycle.emptyWarehouse(staged.sparkSession
+      .createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        staged.schema))
     if (recovered > 0L && current.get() == null) {
       val dir = s"$baseDir/v$recovered"
-      val empty = staged.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), staged.schema)
-      current.compareAndSet(null, Warehouse(
-        spark.read.parquet(s"$dir/dim_airline"),
-        spark.read.parquet(s"$dir/dim_airport"),
-        spark.read.parquet(s"$dir/dim_route"),
-        spark.read.parquet(s"$dir/fact"),
-        empty))
+      val wh = Warehouse(
+        read(dir, "dim_airline", shape.dimAirline.schema),
+        read(dir, "dim_airport", shape.dimAirport.schema),
+        read(dir, "dim_route", shape.dimRoute.schema),
+        read(dir, "fact", shape.fact.schema),
+        shape.staging)
+      // a version committed before the view was stored has none: it
+      // serves the join. The view's schema is analysis only, no job.
+      val curated =
+        if (fs().exists(new org.apache.hadoop.fs.Path(s"$dir/curated")))
+          Some(read(dir, "curated", LoadCycle.curatedView(wh).schema))
+        else None
+      current.compareAndSet(null, wh.copy(curated = curated))
     }
-    current.compareAndSet(null,
-      LoadCycle.emptyWarehouse(staged.sparkSession
-        .createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          staged.schema)))
-    Sinks.start(staged, checkpointDir) { (batch, _) =>
+    current.compareAndSet(null, shape)
+    Sinks.start(staged, checkpointDir) { (microBatch, _) =>
+      // the cutoff and every LoadCycle branch read the batch: run the
+      // source and the parse once. localCheckpoint, not persist(): the
+      // branches then plan over a LogicalRDD instead of the whole
+      // parse subtree (the qWarehouseCycle idiom)
+      val batch = microBatch.localCheckpoint(true)
       // data-derived cutoff: everything in this batch loads this cycle
       val cutoff = batch.agg(max(col("ingest_time"))).first().getTimestamp(0)
       // dims are multi-consumer within the cycle: persist for its

@@ -182,10 +182,15 @@ class LoadCycleSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/wh/v1/fact").exists)
 
     // simulate a crash mid-materialize: v2 exists but has no _COMMITTED
-    // marker (only a partial table dir) — recovery must skip it, and the
-    // version counter must still move past it
+    // marker (only partial table dirs, the stored view's included) —
+    // recovery must skip it, and the version counter must still move
+    // past it
     assert(new java.io.File(s"$dir/wh/v1/_COMMITTED").exists)
     new java.io.File(s"$dir/wh/v2/fact").mkdirs()
+    new java.io.File(s"$dir/wh/v2/curated").mkdirs()
+    // v1 as a version committed before the view was stored: no curated/
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$dir/wh/v1/curated"))
 
     // process 2: fresh JVM analog — new sink instance, same baseDir.
     // Without recovery it would bootstrap empty and overwrite v1.
@@ -193,6 +198,10 @@ class LoadCycleSpec extends SparkSpec {
     val sink2 = new graft.stream.WarehouseSink(spark, s"$dir/wh")
     val q2 = sink2.start(stage0(ms2.toDF().withColumnRenamed("value", "json")),
       s"$dir/cp2")
+    // the recovered v1 has no stored view: reads serve the join
+    assert(sink2.warehouse.curated.isEmpty)
+    assert(LoadCycle.curatedView(sink2.warehouse).select("flight_key")
+      .collect().map(_.getString(0)).toSeq == Seq("r_k1"))
     ms2.addData(event("r_k2", ingest = "2024-05-09T11:00:00Z"))
     q2.processAllAvailable(); q2.stop()
 
@@ -204,6 +213,71 @@ class LoadCycleSpec extends SparkSpec {
       Set("r_k1", "r_k2"))
     assert(new java.io.File(s"$dir/wh/v3/_COMMITTED").exists)
     assert(spark.read.parquet(s"$dir/wh/v1/fact").count() == 1) // v1 untouched
+
+    // process 3 recovers v3 with its stored view, every table read with
+    // the schema its files hold
+    val ms3 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val sink3 = new graft.stream.WarehouseSink(spark, s"$dir/wh")
+    sink3.start(stage0(ms3.toDF().withColumnRenamed("value", "json")),
+      s"$dir/cp3").stop()
+    val wh3 = sink3.warehouse
+    val view = LoadCycle.curatedView(wh3)
+    assert(view.inputFiles.nonEmpty &&
+      view.inputFiles.forall(_.contains("/wh/v3/curated/")), view.inputFiles.toSeq)
+    assertSameRows(view, LoadCycle.curatedView(wh3.copy(curated = None)))
+    assert(view.count() == 2)
+    def fields(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    for ((name, df) <- Seq("dim_airline" -> wh3.dimAirline,
+        "dim_airport" -> wh3.dimAirport, "dim_route" -> wh3.dimRoute,
+        "fact" -> wh3.fact, "curated" -> view))
+      assert(fields(df) == fields(spark.read.parquet(s"$dir/wh/v3/$name")), name)
+  }
+
+  test("WarehouseSink: every committed version stores the curated view of its tables") {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val dir = java.nio.file.Files.createTempDirectory("whview").toString
+    val sink = new graft.stream.WarehouseSink(spark, s"$dir/wh")
+    val q = sink.start(stage0(ms.toDF().withColumnRenamed("value", "json")),
+      s"$dir/cp")
+    val cycles = Seq(
+      Seq(event("c_k1", ingest = "2024-05-09T10:30:00Z")),
+      // a new airline and a new departure airport: dim rows added
+      Seq(event("c_k2", ingest = "2024-05-09T10:40:00Z", airlineIata = "UA",
+        airlineIcao = "UAL", airlineName = "United", depIata = "SFO")),
+      // only a newer snapshot of an existing flight
+      Seq(event("c_k1", status = "landed", ingest = "2024-05-09T11:30:00Z")))
+    cycles.foreach { evs => ms.addData(evs: _*); q.processAllAvailable() }
+    q.stop()
+
+    val base = s"$dir/wh"
+    def table(v: Int, name: String) = spark.read.parquet(s"$base/v$v/$name")
+    val airlines = (1 to 3).map(v => table(v, "dim_airline").count())
+    assert(airlines == Seq(1L, 2L, 2L), airlines)
+    for (v <- 1 to 3) {
+      assert(new java.io.File(s"$base/v$v/_COMMITTED").exists)
+      val fact = table(v, "fact")
+      val joined = LoadCycle.curatedView(LoadCycle.Warehouse(
+        table(v, "dim_airline"), table(v, "dim_airport"),
+        table(v, "dim_route"), fact, fact))
+      assertSameRows(table(v, "curated"), joined)
+    }
+    val statuses = table(3, "curated").select("flight_key", "status", "airline_name")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(statuses == Set(("c_k1", "landed", "American"),
+      ("c_k2", "active", "United")))
+    // the sink's warehouse serves the stored view of the newest version
+    assert(LoadCycle.curatedView(sink.warehouse).inputFiles
+      .forall(_.contains("/wh/v3/curated/")))
+  }
+
+  /** Equal as multisets over every column. */
+  private def assertSameRows(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"got:\n${got.collect().mkString("\n")}\nwant:\n${want.collect().mkString("\n")}")
   }
 
   test("WarehouseSink.vacuum: keeps newest K committed, sweeps old + dead torn dirs") {

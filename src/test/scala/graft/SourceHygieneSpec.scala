@@ -57,6 +57,21 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"TrieMap outside graft.Artifacts: ${keepers.mkString(", ")}")
   }
 
+  test("stream state is read with its declared schema: every parquet read in graft.stream names it") {
+    // a read that infers the schema runs a job for the parquet footer,
+    // once per epoch or version; comments are skipped
+    val comments = "(?s)/\\*.*?\\*/|//[^\n]*".r
+    val read = "\\.read((?:\\s*\\.\\w+\\((?:[^()]|\\([^()]*\\))*\\))*)\\s*\\.parquet\\(".r
+    val inferring = scalaSources("src/main/scala/graft/stream").flatMap { p =>
+      val code = comments.replaceAllIn(new String(Files.readAllBytes(p), "UTF-8"),
+        m => java.util.regex.Matcher.quoteReplacement(m.matched.replaceAll("[^\n]", " ")))
+      read.findAllMatchIn(code).filterNot(_.group(1).contains(".schema("))
+        .map(m => s"${p.getFileName}:${code.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(inferring.isEmpty,
+      s"parquet reads that infer their schema: ${inferring.mkString(", ")}")
+  }
+
   test("no query changes its session: experimental.extraOptimizations is never assigned") {
     val setter = "experimental\\.extraOptimizations\\s*=(?!=)".r
     val setters = scalaSources("src/main")
